@@ -620,8 +620,8 @@ def _cdc_mor_read(spark, sf_dir):
     MERGEd as merge-on-read DELTA files through the production manifest
     sink (write cost ∝ batch, not table — the 100-TB frequent-trigger
     shape). The returned DataFrame is ``sink.read()`` — the read-side
-    base+delta resolution (prefix-max gtid fence + per-cell LWW by commit
-    ordinal) — which must equal the one-shot batch replay's final state:
+    base+delta resolution (one per-key fold in commit order: gtid fence +
+    cell-wise LWW) — which must equal the one-shot batch replay's final state:
     the SAME oracle as cdc_replay_final_state gates it."""
     import hashlib
     import os

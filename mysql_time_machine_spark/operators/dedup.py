@@ -328,7 +328,7 @@ def exact_dedup_stream(
             # it holds and the store accretes tasks x buckets files/epoch,
             # all re-opened by later resolves/compactions. Batch-sized
             # exchange; a replayed epoch repartitions identically, so the
-            # dynamic overwrite stays byte-idempotent.
+            # dynamic overwrite stays row-idempotent.
             .repartition(F.col("_bucket"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -512,6 +512,18 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
+def _check_minhash_args(n_hashes: int, bands: int = 1) -> None:
+    """Reject signature/band shapes the HOF trees below would silently
+    mis-build: ``sequence(0, n_hashes - 1)`` counts DOWN for n_hashes < 1
+    (n_hashes=0 yields 2 hashes), and a band needs a whole number of
+    rows."""
+    if n_hashes < 1 or bands < 1 or n_hashes % bands:
+        raise ValueError(
+            f"MinHash needs n_hashes >= 1, bands >= 1 and n_hashes % bands == 0; "
+            f"got n_hashes={n_hashes}, bands={bands}"
+        )
+
+
 def _minhash_from_shm(shm, n_hashes: int) -> F.Column:
     """K minhashes over an array of shingle DIGESTS: min over shingles of
     md5(k || ':' || md5(shingle)). The single source of the signature
@@ -562,6 +574,7 @@ def minhash_signature(text_col: str, n_hashes: int = 16, n: int = 3) -> F.Column
     fixed 32-char string instead of re-hashing arbitrarily long shingles K
     times — ~K-fold less hashing on long documents. Portable (md5-only) so
     the DuckDB oracle reproduces signatures exactly."""
+    _check_minhash_args(n_hashes)
     base = F.transform(word_shingles(text_col, n), lambda s: F.md5(s))
     return _minhash_from_shm(base, n_hashes)
 
@@ -615,6 +628,7 @@ def minhash_lsh_pairs(
     # purposes, so intersect/union counts — and hence the Jaccard value —
     # are identical), which shrinks the persisted/verified payload to
     # fixed 32-char strings regardless of shingle length.
+    _check_minhash_args(n_hashes, bands)
     reps, members = _identical_text_groups(docs, text_col, id_col, ())
     sh_df = reps.select("id", word_shingles(text_col, n).alias("sh"))
     shm_df = sh_df.select("id", F.transform("sh", lambda s: F.md5(s)).alias("shm"))
@@ -1115,6 +1129,7 @@ def minhash_dedup_stream(
 
     from mysql_time_machine_spark.fsio import MetaFS
 
+    _check_minhash_args(n_hashes, bands)
     fs = MetaFS(sink_dir, spark)
     meta_path = _os.path.join(sink_dir, "_store_meta.json")
     if fs.exists(meta_path):

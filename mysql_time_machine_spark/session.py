@@ -104,6 +104,17 @@ def get_spark(
             "spark.sql.execution.arrow.maxBytesPerBatch",
             os.environ.get("SPARK_GRAFT_ARROW_TARGET_BYTES", str(128 << 20)),
         )
+        # the manifest names every data file, so a read passes file paths,
+        # not directories; past this many paths (default 32) Spark still
+        # launches a "Listing leaf files" job to stat them. A merge-on-read
+        # epoch appends one delta file per bucket, so a table passes 32
+        # files within a few epochs. Measured at local[2] on a 4-vCPU VM,
+        # 112-delta-file table, p50 of 9 interleaved reads: a count over the
+        # deltas 0.83 s -> 0.14 s, the MoR read() 1.29 s -> 0.55 s. The
+        # driver stats the paths itself instead: microseconds per file on a
+        # local root, one namenode call per file on HDFS; reads of more
+        # than 10000 files still list in parallel.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -177,141 +177,120 @@ class ManifestParquetSink(Sink):
         m = self.current_manifest() if snapshot_id is None else self.manifest_at(snapshot_id)
         files = [f for fl in m["buckets"].values() for f in fl]
         schema = self._schema(m)
-        if not files:
-            base = self.spark.createDataFrame([], schema).drop("_bucket")
-        else:
-            # explicit schema: files written before a DDL lack the new column
-            # and read as NULL — Iceberg-style schema evolution on read
-            base = self.spark.read.schema(schema).parquet(*files).drop("_bucket")
         delta_files = [
             f for fl in m.get("delta_buckets", {}).values() for f in fl
         ]
         if not delta_files:
-            return base  # fast path: CoW table or fully-compacted MoR table
+            # fast path: CoW table or fully-compacted MoR table
+            return self._scan_base(files, schema)
         deltas = self.spark.read.schema(self._delta_schema()).parquet(*delta_files)
-        return self._mor_resolve(base, deltas, [tuple(c) for c in m["business_columns"]])
+        return self._mor_resolve(
+            self._scan_base(files, schema) if files else None,
+            deltas,
+            [tuple(c) for c in m["business_columns"]],
+        )
+
+    def _scan_base(self, files: list[str], schema: T.StructType) -> DataFrame:
+        if not files:
+            return self.spark.createDataFrame([], schema).drop("_bucket")
+        # explicit schema: files written before a DDL lack the new column
+        # and read as NULL — Iceberg-style schema evolution on read
+        return self.spark.read.schema(schema).parquet(*files).drop("_bucket")
 
     def _mor_resolve(
         self,
-        base: DataFrame,
+        base: DataFrame | None,
         deltas: DataFrame,
         business_columns: list[tuple[str, str]],
     ) -> DataFrame:
         """Merge-on-read resolution — the write-side MERGE rules
-        (merge_logic.py) replayed declaratively over base + delta rows.
+        (merge_logic.py) replayed over base + delta rows as one ordered
+        fold per key.
 
         Equivalence argument: the CoW per-key gtid guard applies a change
         iff ``b.gtid_seq >= t.gtid_seq`` where t is the row state AFTER
         all earlier epochs, and a dropped (stale) change never advances
-        the stored gtid — so a delta applies iff its gtid_seq >= the MAX
-        gtid_seq over all earlier-committed events of its key (a window
-        filter, no ordered fold needed). After that filter the final row
-        state is exactly the collapse_events_sql shape over pseudo-events:
-        last reset = newest full_image-or-delete, surviving cells =
-        per-cell LWW by commit ordinal from events at-or-after it. One
-        known (and documented) corner beats CoW rather than matching it:
-        a DELETEd key remembers its tombstone gtid here, so a stale
-        late-released insert stays dropped, while CoW's row-level guard
-        loses the tombstone and would resurrect the key.
+        the stored gtid — so a version applies iff its gtid_seq >= the
+        MAX gtid_seq over all earlier-committed versions of its key
+        (``pmax``, advanced by every version, applied or not). An applied
+        version resets the image (a delete empties it, a full image
+        replaces it) or cell-merges into it (``map_concat`` under the
+        session's LAST_WIN policy: cell-wise last-writer-wins), and its
+        metadata becomes the row's. One known (and documented) corner
+        beats CoW rather than matching it: a DELETEd key remembers its
+        tombstone gtid here, so a stale late-released insert stays
+        dropped, while CoW's row-level guard loses the tombstone and
+        would resurrect the key.
 
-        Cost shape: ONE pass over base + deltas — one hash shuffle on the
-        key feeds the fence window, and the fenced rows are
-        localCheckpoint-ed (lazily: blocks materialize at the consumer's
-        first action and live in executor storage, spilling to disk) so
-        the two downstream aggregates read the cached rows instead of
-        re-scanning the union per branch. Round 6's shape re-computed the
-        scan+window THREE times (the per-branch column pruning made each
-        branch's Exchange subtree distinct, defeating ReusedExchange —
-        plan snapshot BENCH/PLANS.md, r6 MoR read). Everything after the
-        window is map-side combinable aggregates + key-sized joins;
-        nothing driver-side, no Python. Compaction (rewrite_data_files)
+        Cost shape: ONE hash shuffle on the key feeds ONE aggregate —
+        each key's versions are collected, sorted by commit ordinal and
+        folded with ``aggregate`` in codegen'd expressions; no window, no
+        checkpoint, no per-cell rows, no joins, no Python. Per-key state
+        is the key's uncompacted versions; compaction (rewrite_data_files)
         folds deltas so steady reads take the base-only fast path."""
-        from pyspark.sql.window import Window
-
-        kv = []
-        for name, _typ in business_columns:
-            kv += [F.lit(name), F.col(name).cast("string")]
-        base_pd = base.select(
-            "repo",
-            "path",
-            F.lit(0).cast("long").alias("_ord"),  # base precedes every delta
-            "row_status",
-            F.lit(True).alias("full_image"),
-            F.map_filter(F.create_map(*kv), lambda k, v: v.isNotNull()).alias("image"),
-            "gtid_seq",
-            "schema_version",
-            "updated_ts",
-        )
-        allr = base_pd.unionByName(
-            deltas.select(
-                "repo", "path", "_ord", "row_status", "full_image", "image",
-                "gtid_seq", "schema_version", "updated_ts",
-            )
-        )
-        # the per-key gtid fence as a prefix-max filter (see docstring)
-        w = (
-            Window.partitionBy("repo", "path")
-            .orderBy("_ord")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        fresh = (
-            allr.withColumn("_pmax", F.max("gtid_seq").over(w))
-            .where(F.col("_pmax").isNull() | (F.col("gtid_seq") >= F.col("_pmax")))
-            .drop("_pmax")
-        ).localCheckpoint(eager=False)
-        last = fresh.groupBy("repo", "path").agg(
-            F.max_by(
-                F.struct("row_status", "gtid_seq", "schema_version", "updated_ts"),
-                F.col("_ord"),
-            ).alias("_last"),
-            # newest reset: a full image replaces, a delete tombstones —
-            # cells older than either are dead (max ignores NULLs)
-            F.max(
-                F.when(
-                    F.col("full_image") | (F.col("row_status") == "D"), F.col("_ord")
-                )
-            ).alias("_last_reset"),
-        )
-        # aggregate-first cell LWW (the collapse_events_sql argument): a
-        # cell is live iff its LAST write is at-or-after the key's reset
-        # bound — any earlier write is superseded either by the reset or
-        # by the later write — so the per-cell aggregate runs over ALL
-        # fenced rows and the reset bound filters the aggregate, not the
-        # raw rows (no join against the row stream)
-        cells = (
-            fresh.where(F.col("row_status") != "D")
-            .select("repo", "path", "_ord", F.explode_outer("image").alias("k", "v"))
-            .where(F.col("k").isNotNull())
-            .groupBy("repo", "path", "k")
-            .agg(
-                F.max_by("v", F.col("_ord")).alias("v"),
-                F.max("_ord").alias("_cell_ord"),
-            )
-            .join(last.select("repo", "path", "_last_reset"), ["repo", "path"])
-            .where(
-                F.col("_last_reset").isNull()
-                | (F.col("_cell_ord") >= F.col("_last_reset"))
-            )
-        )
-        images = cells.groupBy("repo", "path").agg(
-            F.map_from_entries(F.collect_list(F.struct("k", "v"))).alias("image")
-        )
         from mysql_time_machine_spark.functions.core import materialize_cell
 
-        resolved = (
-            last.where(F.col("_last.row_status") != "D")
-            .join(images, ["repo", "path"], "left")
+        cols = ["_ord", "row_status", "full_image", "image", "gtid_seq",
+                "schema_version", "updated_ts"]
+        versions = deltas.select("repo", "path", *cols)
+        if base is not None:  # None: no base files (never compacted)
+            kv = []
+            for name, _typ in business_columns:
+                kv += [F.lit(name), F.col(name).cast("string")]
+            versions = base.select(
+                "repo",
+                "path",
+                F.lit(0).cast("long").alias("_ord"),  # base precedes every delta
+                "row_status",
+                F.lit(True).alias("full_image"),
+                F.map_filter(F.create_map(*kv), lambda k, v: v.isNotNull()).alias("image"),
+                "gtid_seq",
+                "schema_version",
+                "updated_ts",
+            ).unionByName(versions)
+        meta = [n for n, _ in LINEAGE_COLUMNS]
+        no_cells = F.create_map().cast("map<string,string>")
+
+        def step(acc, v):
+            applies = acc["pmax"].isNull() | (v["gtid_seq"] >= acc["pmax"])
+            img = (
+                F.when(~applies, acc["img"])
+                .when(v["row_status"] == "D", no_cells)
+                .when(v["full_image"], F.coalesce(v["image"], no_cells))
+                .otherwise(F.map_concat(acc["img"], F.coalesce(v["image"], no_cells)))
+            )
+            last = F.when(applies, F.struct(*[v[c].alias(c) for c in meta]))
+            return F.struct(
+                F.greatest(acc["pmax"], v["gtid_seq"]).alias("pmax"),
+                img.alias("img"),
+                last.otherwise(acc["last"]).alias("last"),
+            )
+
+        zero = F.struct(
+            F.lit(None).cast("long").alias("pmax"),
+            no_cells.alias("img"),
+            F.lit(None)
+            .cast("struct<" + ",".join(f"{n}:{t}" for n, t in LINEAGE_COLUMNS) + ">")
+            .alias("last"),
+        )
+        # the fold sits in the aggregate's result so the tombstone filter
+        # stays above it (a Project would let the filter push below and
+        # evaluate the fold twice). The struct holds a map, which Spark
+        # cannot order: sort by _ord with an explicit comparator.
+        ordered = F.array_sort(
+            F.collect_list(F.struct(*cols)),
+            lambda a, b: F.signum(a["_ord"] - b["_ord"]).cast("int"),
+        )
+        folded = (
+            versions.groupBy("repo", "path")
+            .agg(F.aggregate(ordered, zero, step).alias("_s"))
+            .where(F.col("_s.last.row_status") != "D")
         )
         out_cols = [F.col("repo"), F.col("path")]
         for name, typ in business_columns:
-            out_cols.append(materialize_cell("image", name, typ))
-        out_cols += [
-            F.col("_last.row_status").alias("row_status"),
-            F.col("_last.gtid_seq").alias("gtid_seq"),
-            F.col("_last.schema_version").alias("schema_version"),
-            F.col("_last.updated_ts").alias("updated_ts"),
-        ]
-        return resolved.select(*out_cols)
+            out_cols.append(materialize_cell(F.col("_s.img"), name, typ))
+        out_cols += [F.col(f"_s.last.{c}").alias(c) for c in meta]
+        return folded.select(*out_cols)
 
     def snapshot_as_of(self, snapshot_id: int) -> DataFrame:
         """Point-in-time read — the hbase-snapshotter (README.md:22-23),
@@ -562,14 +541,7 @@ class ManifestParquetSink(Sink):
             # NOT a per-bucket loop of plans; repartition("_bucket") puts
             # each bucket in one task so each bucket compacts to ONE file
             base_files = [f for b in delta_b for f in m["buckets"].get(b, [])]
-            if base_files:
-                base = (
-                    self.spark.read.schema(read_schema)
-                    .parquet(*base_files)
-                    .drop("_bucket")
-                )
-            else:
-                base = self.spark.createDataFrame([], read_schema).drop("_bucket")
+            base = self._scan_base(base_files, read_schema) if base_files else None
             dfiles = [f for fl in delta_b.values() for f in fl]
             deltas = self.spark.read.schema(self._delta_schema()).parquet(*dfiles)
             resolved = self._mor_resolve(

@@ -213,3 +213,191 @@ def test_expire_changelog_preserves_delta_buckets(spark, tmp_path):
     m = mor.current_manifest()
     assert m.get("delta_buckets"), "changelog retention must not drop deltas"
     assert _read_sorted(mor).equals(before)
+
+
+# ---------------------------------------------------------------------------
+# randomized parity: a long churn history past Spark's 32-path listing
+# threshold, checked against CoW and against a Python model of the MoR rules
+# ---------------------------------------------------------------------------
+
+CHURN_EPOCHS = 42
+CHURN_KEYS = [f"k{i:02d}" for i in range(24)]
+CELLS = ("commit", "lang", "content")
+
+
+def _model_apply(state, path, status, image, full, gtid):
+    """The MoR rules, one version at a time: a version applies iff its
+    gtid >= the max gtid seen on the key; a delete empties the row, a full
+    image replaces it, a partial image merges cell-wise."""
+    st = state.setdefault(path, {"pmax": None, "cells": {}, "live": False, "last": None})
+    if st["pmax"] is None or gtid >= st["pmax"]:
+        if status == "D":
+            st["cells"], st["live"] = {}, False
+        else:
+            st["cells"] = dict(image) if full else {**st["cells"], **image}
+            st["live"] = True
+        st["last"] = (status, gtid)
+    st["pmax"] = gtid if st["pmax"] is None else max(st["pmax"], gtid)
+
+
+def _model_rows(state):
+    return sorted(
+        (p, *(st["cells"].get(c) for c in CELLS), *st["last"])
+        for p, st in state.items()
+        if st["live"]
+    )
+
+
+def _churn_batches(seed=7):
+    """Seeded collapsed batches (one row per key per epoch): inserts,
+    partial updates (some setting a cell to NULL explicitly), full-image
+    replaces, deletes, delete-then-reinsert, stale out-of-order versions
+    and versions at the key's applied gtid. ``hot`` is touched in every
+    epoch. Stale inserts after a delete only hit ``ghost*`` keys: CoW
+    resurrects those (its row guard forgets the tombstone), so they stay
+    out of the CoW comparison."""
+    import random
+
+    rng = random.Random(seed)
+    live: dict[str, int] = {}  # path -> gtid of its latest applied version
+    tombstone: dict[str, int] = {}  # ghost path -> its delete's gtid
+    g = 0
+    out = []
+    for epoch in range(1, CHURN_EPOCHS + 1):
+        rows = []
+        for p in ["hot", *rng.sample(CHURN_KEYS, 6)]:
+            g += 1
+            r = rng.random()
+            if p not in live:
+                img = {"commit": f"c{g}", "lang": rng.choice(["py", None]), "content": f"v{g}"}
+                rows.append((p, "I", img, True, g))
+                live[p] = g
+            elif r < 0.15:
+                rows.append((p, "D", {}, True, g))
+                del live[p]
+            elif r < 0.3:
+                img = {"commit": f"c{g}", "lang": "go", "content": f"f{g}"}
+                rows.append((p, rng.choice("IU"), img, True, g))
+                live[p] = g
+            elif r < 0.42:
+                # stale: below the key's applied gtid, the fence drops it
+                rows.append((p, "U", {"content": "STALE"}, False, live[p] - rng.randint(1, 3)))
+                g -= 1
+            elif r < 0.48:
+                # at the key's applied gtid: the guard is >=, so it applies
+                rows.append((p, "U", {"content": f"again{g}"}, False, live[p]))
+                g -= 1
+            else:
+                cells = {c: f"{c}{g}" for c in rng.sample(CELLS, rng.randint(1, 2))}
+                if rng.random() < 0.3:
+                    cells["lang"] = None  # explicit NULL wins over the old cell
+                rows.append((p, "U", cells, False, g))
+                live[p] = g
+        # ghost key: insert, delete next epoch, then a stale re-insert
+        # below the tombstone the epoch after
+        phase, gp = epoch % 5, f"ghost{epoch - epoch % 5}"
+        if phase in (0, 1, 2) and epoch >= 5:
+            g += 1
+            if phase == 0:
+                rows.append((gp, "I", {"commit": "c", "lang": "py", "content": "G"}, True, g))
+            elif phase == 1:
+                rows.append((gp, "D", {}, True, g))
+                tombstone[gp] = g
+            else:
+                rows.append((gp, "I", {"commit": "c", "lang": "py", "content": "GHOST"},
+                             True, tombstone[gp] - 1))
+        out.append(rows)
+    return out
+
+
+@pytest.fixture(scope="module")
+def churn(spark, tmp_path_factory):
+    """Both strategies fed the same churn, plus the model state after each
+    epoch (snapshot id == epoch id: one commit per epoch, none before)."""
+    root = tmp_path_factory.mktemp("churn")
+    cow = ManifestParquetSink(spark, str(root / "cow"), n_buckets=2)
+    mor = ManifestParquetSink(spark, str(root / "mor"), n_buckets=2, merge_strategy="mor")
+    state: dict = {}
+    models = {}
+    for epoch, rows in enumerate(_churn_batches(), start=1):
+        assert cow.merge(_batch(spark, rows), epoch_id=epoch)
+        assert mor.merge(_batch(spark, rows), epoch_id=epoch)
+        for r in rows:
+            _model_apply(state, *r)
+        models[epoch] = _model_rows(state)
+    return cow, mor, models
+
+
+def _rows(df):
+    return sorted(
+        tuple(r) for r in df.select("path", *CELLS, "row_status", "gtid_seq").collect()
+    )
+
+
+def _no_ghosts(rows):
+    return [r for r in rows if not r[0].startswith("ghost")]
+
+
+def test_mor_churn_parity_every_snapshot(spark, churn):
+    cow, mor, models = churn
+    m = mor.current_manifest()
+    assert sum(len(v) for v in m["delta_buckets"].values()) > 32
+    # the stale-insert-after-delete corner: CoW resurrects, MoR does not
+    assert any(r[0].startswith("ghost") for r in _rows(cow.read()))
+    assert not any(r[0].startswith("ghost") for r in _rows(mor.read()))
+    for sid in range(1, CHURN_EPOCHS + 1):
+        got = _rows(mor.read(snapshot_id=sid))
+        assert got == models[sid], f"snapshot {sid}: MoR != model"
+        assert _no_ghosts(got) == _no_ghosts(_rows(cow.read(snapshot_id=sid))), (
+            f"snapshot {sid}: MoR != CoW"
+        )
+
+
+def test_mor_churn_as_of_gtid_matches_cow(spark, churn):
+    cow, mor, models = churn
+    chain = mor.snapshots()
+    for m in chain[1::6]:
+        for bound in (m["max_gtid_seq"], m["max_gtid_seq"] + 1):
+            got = _rows(mor.snapshot_as_of_gtid(bound))
+            assert _no_ghosts(got) == _no_ghosts(_rows(cow.snapshot_as_of_gtid(bound)))
+            sid = max(c["snapshot_id"] for c in chain if c["max_gtid_seq"] <= bound)
+            assert got == models[sid]
+
+
+def test_mor_churn_compaction_equals_pre_fold_read(spark, churn, tmp_path):
+    """Compact a copy of the churned table (manifests hold absolute file
+    paths, so the copy's reads still resolve the original delta files)."""
+    import shutil
+
+    _, mor, models = churn
+    root = str(tmp_path / "mor")
+    shutil.copytree(mor.root, root)
+    sink = ManifestParquetSink(spark, root, n_buckets=2, merge_strategy="mor")
+    before = _rows(sink.read())
+    assert sink.rewrite_data_files()["folded_delta_buckets"] > 0
+    assert not sink.current_manifest().get("delta_buckets")
+    assert _rows(sink.read()) == before == models[CHURN_EPOCHS]
+
+
+def test_mor_read_plan_one_exchange_and_no_jobs(spark, churn):
+    """Building a MoR read over >32 delta files runs no Spark job (the
+    manifest names every file, so nothing needs a listing job), and the
+    resolve is one aggregate behind one key exchange: no Window, no
+    checkpoint RDD."""
+    _, mor, _ = churn
+    sc = spark.sparkContext
+    group = "mor-read-plan-build"
+    sc.setJobGroup(group, "build the MoR read plan")
+    try:
+        qe = mor.read()._jdf.queryExecution()
+        optimized = qe.optimizedPlan().toString()
+        physical = qe.executedPlan().toString()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for node in ("Window", "LogicalRDD"):
+        assert node not in optimized, optimized
+    exchanges = [ln for ln in physical.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, physical
+    assert "hashpartitioning(repo#" in exchanges[0] and ", path#" in exchanges[0]
+    assert "Scan ExistingRDD" not in physical

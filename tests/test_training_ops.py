@@ -124,6 +124,22 @@ def test_minhash_lsh_finds_planted_dup(spark, docs):
     assert any(r["b_id"] == 10_002 and r["jaccard"] == 1.0 for r in pairs)
 
 
+@pytest.mark.parametrize("n_hashes,bands", [(0, 1), (-4, 1), (16, 0), (16, 5)])
+def test_minhash_rejects_bad_shape(spark, docs, tmp_path, n_hashes, bands):
+    """n_hashes=0 would build a 2-hash signature (sequence(0, -1) counts
+    down); a band must hold a whole number of hashes."""
+    from mysql_time_machine_spark.operators.dedup import minhash_dedup_stream
+
+    with pytest.raises(ValueError, match="n_hashes"):
+        minhash_lsh_pairs(docs, n_hashes=n_hashes, bands=bands)
+    with pytest.raises(ValueError, match="n_hashes"):
+        minhash_dedup_stream(spark, str(tmp_path / "src"), str(tmp_path / "sink"),
+                             n_hashes=n_hashes, bands=bands)
+    if bands == 1:
+        with pytest.raises(ValueError, match="n_hashes"):
+            minhash_signature("text", n_hashes=n_hashes)
+
+
 def test_simhash_portable_and_near_dup(spark):
     d = spark.createDataFrame(
         [

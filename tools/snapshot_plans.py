@@ -151,12 +151,22 @@ def main() -> int:
     mor.merge(collapse_events_sql(ev.where(F.col("gtid_seq") <= mid)), epoch_id=1)
     mor.merge(collapse_events_sql(ev.where(F.col("gtid_seq") > mid)), epoch_id=2)
     out.append(cap(
-        "merge-on-read read(): base+delta resolution (ONE hash shuffle on "
-        "the key feeds the prefix-max gtid fence window, the last-state "
-        "max_by and the per-cell LWW aggregates — no Python, no driver "
-        "state; compaction folds deltas so steady reads skip all of this)",
+        "merge-on-read read(): base+delta resolution (ONE hash exchange on "
+        "the key feeds ONE ObjectHashAggregate whose result folds each key's "
+        "versions, sorted by commit ordinal, through the gtid fence and "
+        "cell-wise LWW — no Window, no checkpoint, no joins, no Python; "
+        "compaction folds deltas so steady reads skip all of this)",
         mor.read(),
     ))
+    with open(os.path.join(REPO, "plans", "mor_fold", "cdc_mor_read_before.txt")) as f:
+        before = f.read().rstrip()
+    out.append(
+        "\n```\n=== merge-on-read read(), BEFORE the keyed fold (kept for "
+        "comparison, captured by this tool from the previous resolve: "
+        "prefix-max fence Window, lazy localCheckpoint read back as Scan "
+        "ExistingRDD, max_by last state, per-cell explode + aggregate, "
+        "collect_list images, two SortMergeJoins) ===\n" + before + "\n```\n"
+    )
     # minhash runs eagerly (stages + unpersists); snapshot the staged read's
     # provenance note instead of forcing a full run at snapshot time
     out.append(
