@@ -5,7 +5,7 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 The headline is the north-star path: end-to-end CDC apply — simulated
-binlog stream -> salted applyInPandas reassembly -> fenced manifest MERGE —
+binlog stream -> salted mapInPandas reassembly -> fenced manifest MERGE —
 reported both as wall seconds and derived change-events/sec. Scaling
 evidence across parallelism levels lives in BENCH/scaling.py (writes
 BENCH/BASELINE.md).

@@ -559,7 +559,7 @@ def write_epoch_files(log: RichLog, out_dir: str, spark: SparkSession) -> list[s
 def write_epoch_files_splitting(log: RichLog, out_dir: str, spark: SparkSession, n_files: int = 8) -> list[str]:
     """Adversarial variant: epoch files cut at arbitrary ROW positions, so
     transactions straddle file (= micro-batch) boundaries. Exercises the v2
-    cross-batch uuidBuffer (streaming/txn_buffer.py); the v1 invariant does
+    cross-batch uuidBuffer (streaming/txn_store.py); the v1 invariant does
     NOT hold for these files."""
     import glob
     import shutil

@@ -5,8 +5,11 @@ Usage (north rule: runs via spark-submit --py-files at N and 4N executors):
     spark-submit --py-files engine.zip jobs/apply.py \
         --binlog-dir /data/binlog --sink-root /lake/repos \
         [--master local[8]] [--table-regex '.*'] [--end-log-file binlog.000007]
-        [--dry-run] [--buckets 16] [--shuffle-partitions 32]
-        [--fail-epochs 2,5]
+        [--dry-run] [--no-changelog] [--buckets 16] [--shuffle-partitions 32]
+        [--max-files-per-trigger 4] [--fail-epochs 2,5]
+        [--binlog-format parquet|json] [--buffer-transactions]
+        [--txn-abandon-timeout '2 hours'] [--timeout-sec 3600]
+        [--collapse-impl auto|sql|sorted|pandas] [--merge-strategy cow|mor]
 """
 
 from __future__ import annotations
@@ -38,21 +41,18 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--fail-epochs", default="", help="comma-sep epoch ids for chaos injection")
     p.add_argument("--binlog-format", default="parquet", choices=("parquet", "json"))
     p.add_argument("--buffer-transactions", action="store_true",
-                   help="cross-batch uuidBuffer (files may split transactions)")
-    p.add_argument("--txn-buffer-impl", default="jvm", choices=("jvm", "state"),
-                   help="jvm = foreachBatch pending store (default, zero Python on the "
-                        "event path); state = applyInPandasWithState operator")
+                   help="cross-batch uuidBuffer (files may split transactions): "
+                        "the JVM pending store, zero Python on the event path")
     p.add_argument("--txn-abandon-timeout", default=None,
                    help="event-time bound evicting BEGIN-without-COMMIT state, e.g. '2 hours'")
     p.add_argument("--timeout-sec", type=float, default=3600,
                    help="bound for the AvailableNow drain; raises TimeoutError (checkpoint "
                         "stays consistent; re-run resumes) instead of silently truncating")
-    p.add_argument("--hot-key-threshold", type=int, default=500_000)
-    p.add_argument("--hot-key-split", type=int, default=8)
     p.add_argument("--collapse-impl", default="auto",
                    choices=("auto", "sql", "sorted", "pandas"),
                    help="collapse kernel; auto = sorted for small micro-batches, "
-                        "sql (aggregate-first) past EngineConfig.big_batch_rows")
+                        "sql (aggregate-first) past EngineConfig.big_batch_rows; "
+                        "pandas = alias of sorted")
     p.add_argument("--merge-strategy", default="cow", choices=("cow", "mor"),
                    help="sink write strategy: copy-on-write rewrites touched "
                         "buckets per epoch; merge-on-read appends per-epoch "
@@ -77,10 +77,7 @@ def main(argv: list[str] | None = None) -> int:
         fail_epochs=frozenset(int(x) for x in args.fail_epochs.split(",") if x),
         binlog_format=args.binlog_format,
         buffer_transactions=args.buffer_transactions,
-        txn_buffer_impl=args.txn_buffer_impl,
         txn_abandon_timeout=args.txn_abandon_timeout,
-        hot_key_threshold=args.hot_key_threshold,
-        hot_key_split=args.hot_key_split,
         collapse_impl=args.collapse_impl,
     )
     sink = ManifestParquetSink(

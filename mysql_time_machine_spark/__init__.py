@@ -8,7 +8,8 @@ streams of MySQL data changes") as an idiomatic Spark pipeline:
     -> event classification / filtering   (ops evidenced at CHANGES.txt:117,41-42)
     -> salted repartition on the row key  (salt spec: CHANGES.txt:102-104)
     -> per-key transaction reassembly + last-writer-wins collapse
-       via Arrow-vectorized applyInPandas (uuidBuffer analogue: CHANGES.txt:168-170)
+       via a streaming Arrow-batched mapInPandas pass over JVM-sorted events
+       (uuidBuffer analogue: CHANGES.txt:168-170)
     -> exactly-once fenced MERGE into a snapshot-versioned lake table
        (safe-checkpoint semantics: CHANGES.txt:3-7,37; HBase versioned
         puts -> table snapshots + time travel: README.md:18-19)

@@ -32,24 +32,6 @@ class EngineConfig:
     target_buckets: int = 16
     #: shuffle partitions for the reassembly groupBy
     shuffle_partitions: int = 32
-    #: hot-key two-stage collapse (streaming pandas path): a key with more
-    #: than this many surviving event-cells in one micro-batch is
-    #: sub-salted and partially collapsed per sub-salt before the final
-    #: per-key collapse. Detection runs on the (cached) micro-batch, so it
-    #: costs one cheap aggregate per epoch. 0 disables.
-    hot_key_threshold: int = 500_000
-    #: sub-salt fan-out for detected hot keys (slices per hot key)
-    hot_key_split: int = 8
-    #: byte-aware Arrow records-cap tuning for BATCH replay's Python
-    #: kernels: estimate the payload width from a bounded limit() sample
-    #: and cap records-per-batch near SPARK_GRAFT_ARROW_TARGET_BYTES.
-    #: Advisory only since r7 — the hard fat-row guard (unbounded cell
-    #: sizes, CHANGES.txt:109-110) is the session-wide
-    #: arrow.maxBytesPerBatch byte cap (session.get_spark), which is why
-    #: the streaming job no longer computes a per-epoch width estimate.
-    #: Narrow rows keep the measured 100k ceiling — zero change on
-    #: normal workloads.
-    auto_arrow_batch: bool = True
 
     # --- sink behaviour ----------------------------------------------------
     #: dry-run: run the full pipeline, skip all writes (CHANGES.txt:43)
@@ -63,16 +45,16 @@ class EngineConfig:
     # --- streaming ---------------------------------------------------------
     max_files_per_trigger: int = 4
     #: collapse kernel: 'auto' (DEFAULT — measured regime split: the
-    #: streaming job picks 'sorted', batch replay picks 'sql'), or pin one
-    #: of 'sql' / 'sorted' / 'pandas'. The measured basis (BENCH):
+    #: streaming job picks 'sorted', batch replay picks 'sql'), or pin
+    #: 'sql' / 'sorted'. 'pandas' is kept as an alias of 'sorted' (the
+    #: former grouped-map kernel's name). The measured basis (BENCH):
     #: big-batch replay is throughput-bound — 'sql' (pure Catalyst) wins
     #: (186 K ev/s vs 125 K at sf0.1 x10; 3.15 M ev/s and 0.95 N->4N at
     #: x900), while per-micro-batch streaming is fixed-cost-bound —
-    #: 'sorted' (Tungsten-sorted mapInPandas, one linear pandas pass, the
-    #: smallest per-batch plan) runs the same stream in 5-7 s vs sql's
-    #: 14 s and still scales 0.84 N->4N. 'pandas' (grouped-map
-    #: applyInPandas) is the readability/debuggability form (0.47-0.59
-    #: N->4N). All three are bit-identical by parity + property tests.
+    #: 'sorted' (Tungsten-sorted mapInPandas, one linear pandas pass with a
+    #: bounded carry, the smallest per-batch plan) runs the same stream in
+    #: 5-7 s vs sql's 14 s and still scales 0.84 N->4N. Both kernels are
+    #: bit-identical by parity + property tests.
     collapse_impl: str = "auto"
     #: 'auto' streaming regime escalation: a micro-batch holding at least
     #: this many ROW events is throughput-bound, not fixed-cost-bound, so
@@ -91,46 +73,28 @@ class EngineConfig:
 
     def resolved_collapse_impl(self, regime: str) -> str:
         """'auto' -> the measured best kernel for the regime
-        ('streaming' -> sorted, 'batch' -> sql); explicit settings win.
-        Unknown names raise (a typo like 'sortd' must not silently fall
-        through a dispatch chain to the slowest kernel)."""
-        if self.collapse_impl != "auto":
-            if self.collapse_impl not in ("sql", "sorted", "pandas"):
-                raise ValueError(
-                    f"unknown collapse_impl {self.collapse_impl!r}; "
-                    "expected 'auto', 'sql', 'sorted', or 'pandas'"
-                )
-            return self.collapse_impl
-        return "sorted" if regime == "streaming" else "sql"
+        ('streaming' -> sorted, 'batch' -> sql); explicit settings win,
+        with 'pandas' an alias of 'sorted'. Unknown names raise (a typo
+        like 'sortd' must not silently fall through a dispatch chain)."""
+        if self.collapse_impl == "auto":
+            return "sorted" if regime == "streaming" else "sql"
+        if self.collapse_impl not in ("sql", "sorted", "pandas"):
+            raise ValueError(
+                f"unknown collapse_impl {self.collapse_impl!r}; "
+                "expected 'auto', 'sql', 'sorted', or 'pandas'"
+            )
+        return "sorted" if self.collapse_impl == "pandas" else self.collapse_impl
+
     #: wire format of the binlog event files: 'parquet' (default, columnar)
     #: or 'json' (one AugmentedRow object per line, CHANGES.txt:87)
     binlog_format: str = "parquet"
     #: v2 cross-batch transaction reassembly: set when the binlog files may
     #: split transactions; with txn-atomic files (MySQL rotation semantics)
-    #: the buffer is unnecessary.
+    #: the buffer is unnecessary. Backed by the JVM pending store
+    #: (streaming/txn_store.py): a broadcast/isin routing on the open-txn
+    #: id set + a fenced epoch-keyed parquet store for boundary-straddling
+    #: fragments, zero Python on the event path.
     buffer_transactions: bool = False
-    #: which implementation backs buffer_transactions:
-    #: 'jvm' (DEFAULT) — foreachBatch pre-partition: broadcast semi/anti
-    #:   join on the committed-txn id set + a fenced epoch-keyed parquet
-    #:   pending store for boundary-straddling fragments. Zero Python on
-    #:   the event path; measured within noise of the unbuffered stream
-    #:   (BENCH_r05). See streaming/txn_store.py for why any
-    #:   through-Python design loses: the pandas conversion of the two
-    #:   map payload columns costs ~16 s per 1M events even as a pure
-    #:   passthrough.
-    #: 'state' — the applyInPandasWithState operator (bucketed hybrid,
-    #:   streaming/txn_buffer.py): Spark-managed state, kept as the
-    #:   parity reference; pays the conversion floor (~4x wall at
-    #:   50-row transactions).
-    txn_buffer_impl: str = "jvm"
-
-    def resolved_txn_buffer_impl(self) -> str:
-        if self.txn_buffer_impl not in ("jvm", "state"):
-            raise ValueError(
-                f"unknown txn_buffer_impl {self.txn_buffer_impl!r}; "
-                "expected 'jvm' or 'state'"
-            )
-        return self.txn_buffer_impl
     #: event-time bound after which a BEGIN-without-COMMIT transaction's
     #: buffered state is evicted (the clear-on-rotate analogue,
     #: CHANGES.txt:112). None = keep state forever (v1 behavior). Only

@@ -70,31 +70,6 @@ def classify_event(op: Column | str = "op", ddl: Column | str = "ddl") -> Column
     )
 
 
-def event_payload_bytes(
-    before: Column | str = "before", after: Column | str = "after"
-) -> Column:
-    """Approximate wire width of one row event's payload: summed cell
-    string lengths of both images plus a fixed envelope. Feeds batch
-    replay's bounded-sample Arrow records-cap tune
-    (session.tune_arrow_batch_for_width); the hard fat-row guard is the
-    session-wide ``arrow.maxBytesPerBatch`` byte cap (session.get_spark),
-    so this estimate is never computed per streaming epoch. Pure Catalyst
-    higher-order functions — no Python."""
-
-    def _map_bytes(c):
-        c = F.col(c) if isinstance(c, str) else c
-        return F.coalesce(
-            F.aggregate(
-                F.map_values(c),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + F.coalesce(F.length(x), F.lit(0)).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-        )
-
-    return _map_bytes(before) + _map_bytes(after) + F.lit(200)
-
-
 # ---------------------------------------------------------------------------
 # P7 — changed-cells projection: for UPDATE events store only cells where
 # before != after (CHANGES.txt:173). Pure map_filter, no Python.

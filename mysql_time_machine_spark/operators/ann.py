@@ -62,12 +62,6 @@ def brute_force_topk_batch(
     brute_force_topk exactly (test invariant)."""
     import pandas as pd
 
-    from mysql_time_machine_spark.session import ensure_default_arrow_batch
-
-    # scored rows are narrow — re-apply the Arrow batch ceiling in case a
-    # fat-row CDC replay tuned it down earlier on this shared session
-    ensure_default_arrow_batch(embeddings.sparkSession)
-
     scored = embeddings.join(F.broadcast(queries)).select(
         F.col(query_id_col),
         F.col(id_col),

@@ -72,18 +72,12 @@ def _decode_batch(pdf: pd.DataFrame, stub: bool) -> pd.DataFrame:
     return df
 
 
-def extract_features(media: DataFrame, decode_stub: bool = True, batch_size_hint: int | None = None) -> DataFrame:
+def extract_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
     """media rows -> per-item features via Arrow-batched mapInPandas.
 
-    ``batch_size_hint`` = expected payload bytes per item: feeds the
-    byte-aware Arrow batch cap so multi-MB media blobs shrink the pandas
-    batch instead of the executor (media rows are the fat-row case the
-    cap exists for; without a hint the session's current setting holds)."""
-
-    if batch_size_hint:
-        from mysql_time_machine_spark.session import tune_arrow_batch_for_width
-
-        tune_arrow_batch_for_width(media.sparkSession, int(batch_size_hint))
+    Multi-MB media blobs are bounded by the session's byte-denominated
+    Arrow batch cap (``arrow.maxBytesPerBatch``, session.get_spark), so a
+    batch of fat items shrinks instead of the executor."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -29,14 +29,15 @@ Collapsed output carries TWO markers the sink consumes:
   post-I images that legitimately lack a column). Relies on the binlog
   invariant that I events carry full post-images.
 
-Two interchangeable implementations (equality is a test invariant):
+Two implementations (equality is a test invariant):
 
-* ``collapse_events_pandas`` — grouped-map ``applyInPandas``; groups are
-  hash *buckets* of the key space (not single keys) so one Arrow batch
-  carries many keys: thousands of tiny per-key Python calls collapse into
-  ~n_shuffle_partitions vectorized calls. Inside, a vectorized
-  reset-segmentation keeps only events at-or-after each key's last I/D,
-  then a single pass merges the few surviving partial updates.
+* ``collapse_events_sorted`` — one salted-bucket JVM shuffle + Tungsten
+  sort by (key, order), then ONE streaming ``mapInPandas`` pass: each
+  Arrow batch collapses its complete keys with vectorized
+  ``drop_duplicates``, and the key straddling a batch boundary is carried
+  as its last write per cell (plus its last event and leading reset), so
+  Python work per batch stays bounded under a hot key. Inside, only events
+  at-or-after each key's last I/D reach Python (``live_events``).
 
 * ``collapse_events_sql`` — pure Catalyst: per-key last reset via
   ``max_by``, then per-*cell* LWW via explode + ``max_by``. No Python at
@@ -46,7 +47,7 @@ Two interchangeable implementations (equality is a test invariant):
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -80,7 +81,7 @@ def _with_ord(events: DataFrame) -> DataFrame:
 
 
 def live_events(events: DataFrame, broadcast_reset: bool = False) -> DataFrame:
-    """JVM-side pre-reduction shared by both collapse paths: keep only
+    """The sorted kernel's JVM-side pre-reduction: keep only
     events at-or-after each key's LAST reset (I or D).
 
     The per-key last-reset aggregate shuffles only (key, order-struct) —
@@ -121,198 +122,25 @@ def _full_image_flags(pdf: pd.DataFrame, meta: pd.DataFrame) -> "pd.Series":
     return flagged["_hr"].notna().to_numpy()
 
 
-def _collapse_bucket_flat(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Collapse one hash bucket of FLATTENED (one row per event-cell) live
-    events. Invariant (guaranteed by live_events upstream): per key, at most
-    one reset event (I or D) survives, and it is the first in order — so
-    per-(key, cell) last-writer-wins over the survivors is exact, including
-    partial updates, deletes, and resurrection-after-delete.
-
-    Everything heavy is vectorized pandas (stable sort + drop_duplicates);
-    the only Python loop runs over the COLLAPSED (key, cell) pairs — the
-    output size, not the event count.
-    """
-    cols = [f.name for f in COLLAPSED_SCHEMA.fields]
-    if pdf.empty:
-        return pd.DataFrame(columns=cols)
-    pdf = pdf.sort_values(ORDER_COLS, kind="mergesort")
-
-    # last event per key -> row_status + lineage meta
-    meta = pdf.drop_duplicates(subset=["repo", "path"], keep="last")
-    # last write per (key, cell) -> final image cells
-    with_cell = pdf[pdf["cell"].notna()]
-    final_cells = with_cell.drop_duplicates(subset=["repo", "path", "cell"], keep="last")
-
-    images: dict[tuple, dict] = {}
-    for repo, path, cell, value in zip(
-        final_cells["repo"].to_numpy(),
-        final_cells["path"].to_numpy(),
-        final_cells["cell"].to_numpy(),
-        final_cells["value"].to_numpy(),
-    ):
-        images.setdefault((repo, path), {})[cell] = value
-
-    out = {
-        "repo": meta["repo"].to_numpy(),
-        "path": meta["path"].to_numpy(),
-        "row_status": meta["op"].to_numpy(),
-        "image": [
-            None if op == "D" else images.get((r, p), {})
-            for r, p, op in zip(meta["repo"].to_numpy(), meta["path"].to_numpy(), meta["op"].to_numpy())
-        ],
-        "full_image": _full_image_flags(pdf, meta),
-        "gtid_seq": meta["gtid_seq"].to_numpy(),
-        "schema_version": meta["schema_version"].to_numpy(),
-        "updated_ts": meta["ts"].to_numpy(),
-    }
-    return pd.DataFrame(out, columns=cols)
-
-
-#: flattened live-event schema shipped over the Arrow boundary (stage-1
-#: partial collapse emits the same shape it consumes)
-FLAT_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("op", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("schema_version", T.IntegerType(), True),
-        T.StructField("gtid_seq", T.LongType(), True),
-        T.StructField("log_file", T.StringType(), False),
-        T.StructField("log_pos", T.LongType(), False),
-        T.StructField("seq_in_txn", T.IntegerType(), True),
-        T.StructField("cell", T.StringType(), True),
-        T.StructField("value", T.StringType(), True),
-        T.StructField("_bucket", T.IntegerType(), False),
-    ]
-)
-
-_FLAT_COLS = [f.name for f in FLAT_SCHEMA.fields]
-
-
-def _partial_collapse_flat(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Stage-1 partial collapse of ONE (bucket, sub-salt) slice of a hot
-    key's flat live events. Emits a row-SUBSET in the same flat shape that
-    preserves everything the final collapse needs:
-
-    * the slice-local last write per (key, cell)  — the GLOBAL last write
-      per cell survives in whichever slice holds it;
-    * the slice-local last event per key          — ditto for the global
-      last event (row_status / lineage meta);
-    * the slice-local first event per key IF it is a reset (I/D) — so the
-      final stage still sees the (unique, live_events-guaranteed) reset
-      and sets full_image correctly even when every one of the reset's
-      cells was overwritten inside this slice.
-
-    The final stage re-runs global per-(key,cell) LWW over the union of
-    slice survivors, so keeping extra (stale-ordered) rows is harmless.
-    """
-    pdf = pdf.sort_values(ORDER_COLS, kind="mergesort")
-    last_cells = pdf[pdf["cell"].notna()].drop_duplicates(
-        subset=["repo", "path", "cell"], keep="last"
-    )
-    meta = pdf.drop_duplicates(subset=["repo", "path"], keep="last")
-    first = pdf.drop_duplicates(subset=["repo", "path"], keep="first")
-    resets = first[first["op"].isin(["I", "D"])]
-    out = pd.concat([last_cells, meta, resets], ignore_index=True).drop_duplicates(
-        subset=["repo", "path", "cell"] + ORDER_COLS
-    )
-    return out[_FLAT_COLS]
-
-
-def collapse_events_pandas(
-    events: DataFrame,
-    n_buckets: int = 64,
-    hot_keys: list[tuple[str, str]] | None = None,
-    hot_key_split: int = 8,
-    hot_key_threshold: int = 0,
-    broadcast_reset: bool = False,
-) -> DataFrame:
-    """North-rule path: salted-bucket repartition + grouped-map applyInPandas.
-
-    ``n_buckets`` is the shuffle-group count: the md5-salt of the key
-    (CHANGES.txt:102-104) decides the bucket, so hot *keys* spread across
-    the hash space like every other key, and one executor task handles one
-    bucket's worth of keys in a single Arrow batch.
-
-    Hot-key two-stage collapse (the reference's salting story,
-    CHANGES.txt:102-104, at sub-key granularity): a key whose surviving
-    partial updates all share one bucket would otherwise have to fit a
-    single Arrow batch. Keys in ``hot_keys`` are SUB-SALTED on
-    pmod(xxhash64(order columns), hot_key_split); each (bucket, sub-salt)
-    slice is partially collapsed first (_partial_collapse_flat), then the
-    final per-bucket collapse merges the slice survivors — the classic
-    partial/final aggregate shape, exact because per-(key,cell) LWW is
-    order-max composable. ``hot_key_threshold`` > 0 self-detects hot keys
-    with one count aggregate over the live events (an extra Spark action:
-    cheap when ``events`` is a cached micro-batch — the streaming job's
-    case — but a full recompute otherwise, so batch replay passes
-    detection off and explicit ``hot_keys`` when known).
-    """
-    # column-prune BEFORE the shuffle + Arrow hop: only what the kernel reads
-    # crosses the exchange and the JVM<->Python boundary ('before', gtid
-    # strings, txn metadata never do)
-    needed = ["repo", "path", "op", "after", "ts", "schema_version"] + ORDER_COLS
-    pruned = events.select(*needed)
-    # JVM-side pre-reduction: Python only ever sees events that can still
-    # influence a final image (see live_events)
-    live = live_events(pruned, broadcast_reset=broadcast_reset).drop("_ord")
-    # flatten the image map JVM-side: Arrow then ships plain string columns
-    # (no per-row python dict materialization — the map type is rebuilt only
-    # for the collapsed output)
-    flat = live.select(
-        "repo", "path", "op", "ts", "schema_version", *ORDER_COLS,
-        F.explode_outer("after").alias("cell", "value"),
-    )
-    bucketed = flat.withColumn("_bucket", salted_shuffle_key(n_buckets))
-
-    if hot_keys is None and hot_key_threshold > 0:
-        hot_keys = [
-            (r["repo"], r["path"])
-            for r in bucketed.groupBy("repo", "path")
-            .count()
-            .where(F.col("count") > hot_key_threshold)
-            .collect()
-        ]
-    if hot_keys:
-        hot_set = [f"{r}\x00{p}" for r, p in hot_keys]
-        is_hot = F.concat_ws("\x00", F.col("repo"), F.col("path")).isin(hot_set)
-        sub = F.pmod(
-            F.xxhash64(*[F.col(c) for c in ORDER_COLS]), F.lit(hot_key_split)
-        ).cast("int")
-        partial = (
-            bucketed.where(is_hot)
-            .withColumn("_subsalt", sub)
-            .groupBy("_bucket", "_subsalt")
-            .applyInPandas(
-                lambda pdf: _partial_collapse_flat(pdf.drop(columns=["_subsalt"])),
-                FLAT_SCHEMA,
-            )
-        )
-        bucketed = bucketed.where(~is_hot).unionByName(partial)
-
-    return (
-        bucketed.groupBy("_bucket")
-        .applyInPandas(lambda pdf: _collapse_bucket_flat(pdf.drop(columns=["_bucket"])), COLLAPSED_SCHEMA)
-    )
-
-
 def collapse_events_sorted(
     events: DataFrame, n_buckets: int = 64, broadcast_reset: bool = False
 ) -> DataFrame:
-    """Scale variant of the pandas path: one JVM shuffle on the salted
-    bucket + Tungsten sortWithinPartitions((key, order)) + a STREAMING
-    mapInPandas kernel.
+    """One JVM shuffle on the salted bucket + Tungsten
+    sortWithinPartitions((key, order)) + a STREAMING mapInPandas kernel.
 
-    Unlike groupBy().applyInPandas — which re-sorts inside Python — the
-    sort runs in whole-stage-codegen'd JVM code (spillable, radix-assisted),
-    and Python does a single linear pass of vectorized drop_duplicates per
-    Arrow batch with a small carry for keys spanning batch boundaries.
+    The sort runs in whole-stage-codegen'd JVM code (spillable,
+    radix-assisted), and Python does a single linear pass of vectorized
+    drop_duplicates per Arrow batch with a bounded carry for the key that
+    spans a batch boundary (_collapse_sorted_batches).
     """
     needed = ["repo", "path", "op", "after", "ts", "schema_version"] + ORDER_COLS
+    # JVM-side pre-reduction: Python only ever sees events that can still
+    # influence a final image (see live_events)
     live = live_events(
         events.select(*needed), broadcast_reset=broadcast_reset
     ).drop("_ord")
+    # flatten the image map JVM-side: Arrow then ships plain string columns
+    # (the map type is rebuilt only for the collapsed output)
     flat = live.select(
         "repo", "path", "op", "ts", "schema_version", *ORDER_COLS,
         F.explode_outer("after").alias("cell", "value"),
@@ -321,33 +149,62 @@ def collapse_events_sorted(
         flat.repartition(n_buckets, salted_shuffle_key(n_buckets))
         .sortWithinPartitions("repo", "path", *ORDER_COLS)
     )
+    return arranged.mapInPandas(_collapse_sorted_batches, COLLAPSED_SCHEMA)
 
-    def kernel(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if pdf.empty:
-                continue
-            # hold back the (possibly incomplete) trailing key
-            last_repo = pdf["repo"].iloc[-1]
-            last_path = pdf["path"].iloc[-1]
-            tail_mask = (pdf["repo"] == last_repo) & (pdf["path"] == last_path)
-            carry = pdf.loc[tail_mask]
-            head = pdf.loc[~tail_mask]
-            if len(head):
-                yield _collapse_sorted_flat(head)
-        if carry is not None and len(carry):
-            yield _collapse_sorted_flat(carry)
 
-    return arranged.mapInPandas(kernel, COLLAPSED_SCHEMA)
+def _collapse_sorted_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The streaming kernel over (key, order)-sorted flat batches: collapse
+    every complete key of a batch, and carry the trailing key (which may
+    continue in the next batch) as its _fold_carry survivors only — so a
+    hot key spanning many batches costs O(its distinct cells) per batch,
+    not O(its events so far)."""
+    carry: pd.DataFrame | None = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if pdf.empty:
+            continue
+        # the input is key-sorted, so the trailing key's rows are a suffix
+        is_last = (pdf["repo"] == pdf["repo"].iat[-1]) & (pdf["path"] == pdf["path"].iat[-1])
+        split = len(pdf) - int(is_last.sum())
+        carry = _fold_carry(pdf.iloc[split:])
+        if split:
+            yield _collapse_sorted_flat(pdf.iloc[:split])
+    if carry is not None and len(carry):
+        yield _collapse_sorted_flat(carry)
+
+
+def _fold_carry(tail: pd.DataFrame) -> pd.DataFrame:
+    """The rows of ONE key's (order-sorted) flat live events that decide its
+    collapse: the last write per cell (the image), the last row (row_status
+    and lineage meta), and the first row when it is a reset — live_events
+    leaves at most one reset per key and puts it first, so that row alone
+    keeps full_image. Later rows of the key then fold onto this subset
+    exactly as onto the full prefix (last-writer-wins composes). Selected
+    by a positional mask, so the carry stays in (key, order) order without a
+    re-sort and holds at most (distinct cells + 2) rows."""
+    cell = tail["cell"]
+    keep = cell.notna().to_numpy() & ~cell.duplicated(keep="last").to_numpy()
+    keep[-1] = True
+    if tail["op"].iat[0] in ("I", "D"):
+        keep[0] = True
+    return tail[keep]
 
 
 def _collapse_sorted_flat(pdf: pd.DataFrame) -> pd.DataFrame:
-    """_collapse_bucket_flat minus the sort — input arrives (key, order)-
-    sorted from the JVM."""
+    """Collapse (key, order)-sorted FLATTENED (one row per event-cell) live
+    events. Invariant (guaranteed by live_events upstream): per key, at most
+    one reset event (I or D) survives, and it is the first in order — so
+    per-(key, cell) last-writer-wins over the survivors is exact, including
+    partial updates, deletes, and resurrection-after-delete.
+
+    Everything heavy is vectorized pandas (drop_duplicates); the only
+    Python loop runs over the COLLAPSED (key, cell) pairs — the output
+    size, not the event count."""
     cols = [f.name for f in COLLAPSED_SCHEMA.fields]
+    # last event per key -> row_status + lineage meta
     meta = pdf.drop_duplicates(subset=["repo", "path"], keep="last")
+    # last write per (key, cell) -> final image cells
     final_cells = pdf[pdf["cell"].notna()].drop_duplicates(
         subset=["repo", "path", "cell"], keep="last"
     )
@@ -474,7 +331,7 @@ def collapse_events_sql(events: DataFrame, *, join_prefilter: bool = False) -> D
             F.col("_last.op").alias("row_status"),
             # a live key with NO surviving cells (e.g. an INSERT carrying an
             # empty post-image) is an EMPTY map, not NULL — only deletes are
-            # NULL (kernel-equality invariant with the pandas kernels)
+            # NULL (kernel-equality invariant with the sorted kernel)
             F.when(
                 F.col("_last.op") == "D", F.lit(None).cast("map<string,string>")
             ).otherwise(

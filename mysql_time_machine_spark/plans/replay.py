@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from mysql_time_machine_spark.config import EngineConfig
 from mysql_time_machine_spark.operators.reassemble import (
-    collapse_events_pandas,
     collapse_events_sorted,
     collapse_events_sql,
     materialize,
@@ -46,38 +45,20 @@ def replay_batch(
 
     ``impl='auto'`` resolves to the pure-Catalyst kernel — big-batch
     replay is throughput-bound and it is the measured winner there
-    (EngineConfig.collapse_impl documents the regime split)."""
+    (EngineConfig.collapse_impl documents the regime split); 'pandas' is
+    an alias of 'sorted'."""
     cfg = cfg or EngineConfig()
     if impl == "auto":
-        impl = cfg.resolved_collapse_impl("batch")
+        impl = cfg.collapse_impl
+    impl = EngineConfig(collapse_impl=impl).resolved_collapse_impl("batch")
     ev = filter_events(events, cfg)
-    if impl in ("pandas", "sorted") and cfg.auto_arrow_batch:
-        # byte-aware Arrow batch cap for the Python kernels: estimate the
-        # payload width from a bounded sample (limit() stops the scan
-        # early) so multi-MB cells (no-max-cell-size rule) shrink the
-        # batch instead of the executor; narrow rows keep the measured
-        # 100k ceiling — same plan, same perf
-        from mysql_time_machine_spark.functions.core import event_payload_bytes
-        from mysql_time_machine_spark.session import tune_arrow_batch_for_width
-
-        est = (
-            ev.limit(2048)
-            .agg(F.avg(event_payload_bytes()).alias("w"))
-            .head()["w"]
-        )
-        if est is not None:
-            tune_arrow_batch_for_width(ev.sparkSession, int(est))
-    if impl == "pandas":
-        collapsed = collapse_events_pandas(ev, n_buckets=cfg.shuffle_partitions * 2)
-    elif impl == "sorted":
-        collapsed = collapse_events_sorted(ev, n_buckets=cfg.shuffle_partitions * 2)
-    elif impl == "sql":
+    if impl == "sql":
         # batch regime: AQE is available, so the join-prefilter shape drops
         # dead events before the cell explode at no exchange cost (the
         # streaming escalation keeps the aggregate-first default)
         collapsed = collapse_events_sql(ev, join_prefilter=True)
-    else:  # pragma: no cover
-        raise ValueError(f"unknown impl {impl!r}")
+    else:
+        collapsed = collapse_events_sorted(ev, n_buckets=cfg.shuffle_partitions * 2)
     out = materialize(collapsed, business_columns)
     if not keep_tombstones:
         out = out.where(F.col("row_status") != "D")

@@ -14,57 +14,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-def tune_arrow_batch_for_width(spark: SparkSession, est_row_bytes: int) -> int:
-    """Byte-aware Arrow RECORDS-cap sizing from a width estimate: cap
-    records-per-batch so a batch stays near SPARK_GRAFT_ARROW_TARGET_BYTES
-    (default 128 MiB), clamped to [16, SPARK_GRAFT_ARROW_BATCH]. Narrow
-    rows keep the 100k ceiling (measured optimal, BENCH/SORTED_PAIRB_r4.md);
-    fat rows shrink the batch instead of the executor.
-
-    Since round 7 this is an ADVISORY tune on top of the hard guard: the
-    session pins ``arrow.maxBytesPerBatch`` to the same byte target
-    (get_spark below), which the JVM Arrow writers enforce directly on
-    every transfer — so a path that skips this tune (the streaming job
-    dropped its per-epoch width scan) is still byte-bounded under the
-    reference's no-max-cell-size rule (CHANGES.txt:109-110). Callers with
-    a cheap width estimate in hand (batch replay's limit() sample, the
-    multimodal batch_size_hint) still apply it so the records cap matches
-    the expected width up front. Returns the applied value."""
-    target = int(os.environ.get("SPARK_GRAFT_ARROW_TARGET_BYTES", str(128 << 20)))
-    ceiling = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "100000"))
-    n = max(16, min(ceiling, target // max(1, int(est_row_bytes))))
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(n))
-    return n
-
-
-def ensure_default_arrow_batch(spark: SparkSession) -> int:
-    """Re-apply the default Arrow batch ceiling. ``maxRecordsPerBatch`` is
-    session-global and read at EXECUTION time, so a fat-row tune (above)
-    would otherwise stay sticky and silently shrink batches for every
-    later pandas-UDF workload in the session. Scoping protocol: the
-    narrow-row ANN top-k kernel re-applies it at entry (multimodal
-    instead re-TUNES via its batch_size_hint — media blobs are the
-    fat-row case; the streaming job no longer tunes — the session byte
-    cap covers its kernels, so there is nothing to restore per epoch).
-    Batch replay's tune intentionally persists until its lazy plan
-    executes; run replay plans before building unrelated pandas plans in
-    the same session.
-
-    KNOWN ORDERING HAZARD (accepted, documented): because the conf is
-    read at execution, interleaving plan BUILDS that tune with plan
-    EXECUTIONS that assume a tune is still pending can cross wires —
-    e.g. build a fat-row ``extract_features(batch_size_hint=...)`` plan,
-    then call a narrow kernel that re-applies the default HERE, then
-    execute the fat plan: it runs at the default cap. PySpark exposes no
-    per-plan Arrow cap to fix this structurally; the rule is EXECUTE a
-    tuned plan before entering another operator that touches the cap
-    (all package-internal paths follow it — replay executes its plan in
-    the same call chain)."""
-    ceiling = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "100000"))
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ceiling))
-    return ceiling
-
-
 def get_spark(
     app_name: str = "mysql-time-machine-spark",
     master: str | None = None,

@@ -2,12 +2,16 @@
 
 readStream over the simulated binlog directory -> per-micro-batch:
 
-  1. classify + filter (P1/F1/S4)
-  2. DDL events -> active-schema registry (driver-side, tiny) -> target
+  1. (optional, ``buffer_transactions``) the uuidBuffer: the JVM pending
+     store releases committed transactions whole and parks fragments that
+     straddle a micro-batch boundary (streaming/txn_store.py)
+  2. classify + filter (P1/F1/S4)
+  3. DDL events -> active-schema registry (driver-side, tiny) -> target
      schema evolution (J0 / CHANGES.txt:117,57,44-46)
-  3. salted repartition + applyInPandas reassembly/collapse (A1/A2,
-     uuidBuffer analogue CHANGES.txt:168-170)
-  4. fenced MERGE + changelog + lineage in ONE atomic sink commit
+  4. live-event pre-reduction + last-writer-wins collapse: the sorted
+     mapInPandas kernel, or the pure-Catalyst kernel for big batches
+     (A1/A2, uuidBuffer analogue CHANGES.txt:168-170)
+  5. fenced MERGE + changelog + lineage in ONE atomic sink commit
      (J1/J2/A4/A6; exactly-once per CHANGES.txt:3-7,37,113-116)
 
 Thread/process boundaries vs the reference (SURVEY.md §3.1): the
@@ -16,12 +20,13 @@ driver/executor split; the bounded in-memory queue becomes
 maxFilesPerTrigger backpressure; applier task retry/requeue
 (CHANGES.txt:63) is Spark task retry.
 
-Why foreachBatch and not applyInPandasWithState: binlog order is total
-per server — there is no late data (SURVEY §2.8 ST2) — and the generator
-guarantees txn-atomic epoch files (MySQL rotation guarantees the same), so
-cross-batch transaction state is unnecessary; the fence table, not
-operator state, carries exactly-once across restarts. State we DO keep
-(the active schema) is driver-side and manifest-persisted.
+Why foreachBatch and not a stateful operator: binlog order is total per
+server — there is no late data (SURVEY §2.8 ST2) — so the only state that
+crosses micro-batches is small and replayable. Transactions cut by a file
+boundary sit in the pending store, an epoch-keyed snapshot that a
+replayed epoch rewrites identically; the active schema is driver-side and
+manifest-persisted; the sink's epoch fence, not operator state, carries
+exactly-once across restarts.
 """
 
 from __future__ import annotations
@@ -51,7 +56,6 @@ def _phase(spark: SparkSession, name: str):
 
 from mysql_time_machine_spark.config import EngineConfig
 from mysql_time_machine_spark.functions.core import classify_event, daily_bucket_utc
-from mysql_time_machine_spark.operators.reassemble import collapse_events_pandas
 from mysql_time_machine_spark.plans.replay import filter_events
 from mysql_time_machine_spark.registry import SchemaRegistry
 from mysql_time_machine_spark.sinks.manifest import ManifestParquetSink
@@ -87,30 +91,22 @@ class ApplyJob:
         self.checkpoint_dir = checkpoint_dir or os.path.join(sink.root, "_checkpoint")
         self.txn_store = None
         if self.cfg.buffer_transactions:
-            # key the checkpoint by the buffer impl + its format version: a
-            # binary with a different impl or a bumped version starts a
-            # FRESH checkpoint instead of silently resuming incompatible
-            # state (offsets replay; the sink fence makes that idempotent)
-            impl = self.cfg.resolved_txn_buffer_impl()
-            if impl == "state":
-                from mysql_time_machine_spark.streaming.txn_buffer import STATE_FORMAT_VERSION
+            # key the checkpoint by the pending-store format version: a
+            # binary with a bumped version starts a FRESH checkpoint instead
+            # of silently resuming incompatible state (offsets replay; the
+            # sink fence makes that idempotent)
+            from mysql_time_machine_spark.streaming.txn_store import (
+                PENDING_FORMAT_VERSION,
+                TxnPendingStore,
+            )
 
-                self.checkpoint_dir = os.path.join(
-                    self.checkpoint_dir, f"txn_state_v{STATE_FORMAT_VERSION}"
-                )
-            else:
-                from mysql_time_machine_spark.streaming.txn_store import (
-                    PENDING_FORMAT_VERSION,
-                    TxnPendingStore,
-                )
-
-                self.checkpoint_dir = os.path.join(
-                    self.checkpoint_dir, f"txn_jvm_v{PENDING_FORMAT_VERSION}"
-                )
-                self.txn_store = TxnPendingStore(
-                    self.checkpoint_dir + "_pending",
-                    abandon_timeout=self.cfg.txn_abandon_timeout,
-                )
+            self.checkpoint_dir = os.path.join(
+                self.checkpoint_dir, f"txn_jvm_v{PENDING_FORMAT_VERSION}"
+            )
+            self.txn_store = TxnPendingStore(
+                self.checkpoint_dir + "_pending",
+                abandon_timeout=self.cfg.txn_abandon_timeout,
+            )
         # active schema reloaded from the last committed manifest — schema
         # history survives crashes with the data it describes
         self.registry = SchemaRegistry.from_manifest(sink.current_manifest().get("registry", []))
@@ -132,8 +128,8 @@ class ApplyJob:
             # (A3/A5) event-level metrics: consumed counts by class + max
             # replication delay, excluding ROTATE's ts=0 (CHANGES.txt:58-61).
             # The empty-batch probe rides the same aggregate: an empty
-            # micro-batch (stateful upstream ops like txn-buffer timeouts
-            # emit them) yields zero groups, so the dedicated isEmpty()
+            # micro-batch (e.g. every row parked by the txn buffer)
+            # yields zero groups, so the dedicated isEmpty()
             # job the epoch used to pay is free. The aggregate reads ONLY
             # narrow columns — the round-6 payload-width term (a full
             # map-column scan+fold per epoch, ~3x the rest of this scan)
@@ -161,14 +157,11 @@ class ApplyJob:
                 # map-side combine shrinks the exchange to ~keys x cells,
                 # where the sorted kernel would shuffle every raw event
                 impl = "sql"
-            elif (
-                events_consumed.get("DDL", 0) > 0
-                or (cfg.write_changelog and not cfg.dry_run)
-                or (impl == "pandas" and cfg.hot_key_threshold > 0)
+            elif events_consumed.get("DDL", 0) > 0 or (
+                cfg.write_changelog and not cfg.dry_run
             ):
-                # small-batch regime WITH a second consumer (DDL collect,
-                # changelog branch, or the pandas kernel's hot-key
-                # detection aggregate): the re-scans win from a cache. A
+                # small-batch regime WITH a second consumer (DDL collect or
+                # changelog branch): the re-scans win from a cache. A
                 # BIG batch must NOT be materialized — caching 10s of
                 # millions of rows to re-read them twice costs more than
                 # the column-pruned parquet re-scans it saves, and the
@@ -224,11 +217,10 @@ class ApplyJob:
                     daily_bucket_utc("ts").alias("day_utc"),
                 )
 
-            # (A1/A2) reassemble + collapse; hot keys two-stage via sub-salt
-            # (detection aggregate runs on the persisted micro-batch — cheap).
-            # 'auto' resolves to the sorted kernel here: micro-batches are
-            # fixed-cost-bound and it runs the smallest per-batch plan
-            # (see EngineConfig.collapse_impl for the measured basis)
+            # (A1/A2) reassemble + collapse. 'auto' resolves to the sorted
+            # kernel here: micro-batches are fixed-cost-bound and it runs
+            # the smallest per-batch plan (see EngineConfig.collapse_impl
+            # for the measured basis).
             # micro-batch AQE is off, so the live_events reset join would
             # plan a full-data SortMergeJoin; the stats aggregate proved the
             # batch (hence its distinct-key side) is bounded, so hint the
@@ -238,19 +230,11 @@ class ApplyJob:
                 from mysql_time_machine_spark.operators.reassemble import collapse_events_sql
 
                 collapsed = collapse_events_sql(rows)
-            elif impl == "sorted":
+            else:
                 from mysql_time_machine_spark.operators.reassemble import collapse_events_sorted
 
                 collapsed = collapse_events_sorted(
                     rows, n_buckets=cfg.shuffle_partitions, broadcast_reset=bounded
-                )
-            else:
-                collapsed = collapse_events_pandas(
-                    rows,
-                    n_buckets=cfg.shuffle_partitions,
-                    hot_key_split=cfg.hot_key_split,
-                    hot_key_threshold=cfg.hot_key_threshold,
-                    broadcast_reset=bounded,
                 )
 
             # deterministic chaos monkey (seeded analogue of CHANGES.txt:126):
@@ -284,25 +268,12 @@ class ApplyJob:
     def stream(self) -> DataFrame:
         from mysql_time_machine_spark.sources.binlog import binlog_stream
 
-        s = binlog_stream(
+        return binlog_stream(
             self.spark,
             self.binlog_dir,
             fmt=self.cfg.binlog_format,
             max_files_per_trigger=self.cfg.max_files_per_trigger,
         )
-        if self.cfg.buffer_transactions and self.txn_store is None:
-            # 'state' impl: cross-batch uuidBuffer as a stateful operator —
-            # bucketed hybrid (batch-complete txns bypass state inside the
-            # group call, Python calls capped at shuffle_partitions/batch).
-            # The default 'jvm' impl resolves inside process_batch instead.
-            from mysql_time_machine_spark.streaming.txn_buffer import buffer_transactions
-
-            s = buffer_transactions(
-                s,
-                abandon_timeout=self.cfg.txn_abandon_timeout,
-                n_buckets=self.cfg.shuffle_partitions,
-            )
-        return s
 
     def run_available(self, timeout_sec: float = 600) -> None:
         """Consume everything currently in the binlog dir, then stop —

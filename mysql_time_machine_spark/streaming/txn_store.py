@@ -1,21 +1,21 @@
 """JVM-side cross-batch transaction reassembly — the uuidBuffer as a
-fenced pending-fragment store (the default ``buffer_transactions`` path).
+fenced pending-fragment store (the ``buffer_transactions`` path).
 
 The reference buffers events per transaction uuid and releases them at
-COMMIT (/root/reference/CHANGES.txt:168-170). Round 4 expressed that with
-``applyInPandasWithState`` keyed by txn_id (streaming/txn_buffer.py) and
-measured a 4.6x wall overhead vs the unbuffered path; round 5's hybrid
-re-keying (bucketed state, batch-complete txns vectorized inside the
-group call) barely moved it — a PURE PASSTHROUGH ``applyInPandas`` over
-the same stream costs ~16 s per 1M events at local[32], because every
-row's two ``map<string,string>`` payload columns are converted to Python
-dicts per row on the way into pandas. The conversion floor, not the
-per-group call count, is the scale-killer: ANY design that routes the
-full event stream through a Python worker pays it.
+COMMIT (/root/reference/CHANGES.txt:168-170). An earlier design expressed
+that with ``applyInPandasWithState`` keyed by txn_id and measured a 4.6x
+wall overhead vs the unbuffered path; bucketed re-keying (batch-complete
+txns vectorized inside the group call) barely moved it — a PURE
+PASSTHROUGH ``applyInPandas`` over the same stream costs ~16 s per 1M
+events at local[32], because every row's two ``map<string,string>``
+payload columns are converted to Python dicts per row on the way into
+pandas. The conversion floor, not the per-group call count, is the
+scale-killer: ANY design that routes the full event stream through a
+Python worker pays it.
 
 So this operator routes NOTHING through Python. Inside ``foreachBatch``
 (where the micro-batch is a plain DataFrame and arbitrary batch plans are
-legal), the split the state-op could not express declaratively is one
+legal), the split a stateful operator could not express declaratively is one
 narrow aggregate plus pushed-down filters, entirely JVM-side:
 
 1. union the micro-batch with the (tiny) pending-fragment store left by
@@ -55,23 +55,23 @@ max event time seen (the watermark analogue, persisted in each
 snapshot's meta so it survives restarts and replays deterministically).
 With ``abandon_timeout`` set, open transactions whose last buffered
 activity fell more than the timeout behind the high-water mark are
-dropped from the new snapshot — same event-time bound the state-op
-variant enforces with ``GroupStateTimeout``, computed with one tiny
+dropped from the new snapshot — the event-time bound a stateful
+operator would enforce with ``GroupStateTimeout``, computed with one tiny
 aggregate instead of armed timers.
 
-EVICTED-THEN-COMMITTED (the pinned semantics, shared with the state-op
-variant): eviction drops a transaction WHOLE — if its COMMIT (and any
-trailing fragments) arrive in a LATER epoch, they are dropped too, never
-applied as a partial transaction. Each snapshot's meta carries a small
-grace set ``evicted: {txn_id: hwm_ms_at_eviction}``; rows and COMMITs of
-those ids are discarded on arrival. A grace entry is retired when its
-COMMIT is seen (binlog delivery is in-order per ST2 — nothing of a txn
-can follow its own COMMIT) or when the high-water mark advances
-``abandon_timeout`` past the eviction point. The set is capped at
-``CONTROL_CAP`` entries (meta is driver JSON); a commit arriving beyond
-both bounds, or for an id pushed out by the cap, applies its trailing
-fragments partially — size ``abandon_timeout`` above the producer's
-worst-case stall to keep that corner unreachable.
+EVICTED-THEN-COMMITTED (the pinned semantics): eviction drops a
+transaction WHOLE — if its COMMIT (and any trailing fragments) arrive in
+a LATER epoch, they are dropped too, never applied as a partial
+transaction. Each snapshot's meta carries a small grace set ``evicted:
+{txn_id: hwm_ms_at_eviction}``; rows and COMMITs of those ids are
+discarded on arrival. A grace entry is retired when its COMMIT is seen
+(binlog delivery is in-order per ST2 — nothing of a txn can follow its
+own COMMIT) or when the high-water mark advances ``abandon_timeout``
+past the eviction point. The set is capped at ``CONTROL_CAP`` entries
+(meta is driver JSON); a commit arriving beyond both bounds, or for an
+id pushed out by the cap, applies its trailing fragments partially —
+size ``abandon_timeout`` above the producer's worst-case stall to keep
+that corner unreachable.
 
 DRIVER-STATE BOUNDS: the per-epoch control aggregate hands the driver at
 most ``CONTROL_CAP`` open-transaction structs (the collect is sliced in
@@ -88,9 +88,7 @@ SAME root. Meta IO routes through ``fsio.MetaFS`` — direct ``os`` calls
 for plain/file:// roots, the JVM Hadoop FileSystem API for any DFS
 scheme (hdfs://, s3a://, ...) — so the store works wherever the
 executors can write parquet, local mode and real clusters alike.
-``fsio.py`` documents the object-store rename caveat; the 'state'
-buffer impl (Spark-managed state store) remains the alternative where
-even that is unacceptable.
+``fsio.py`` documents the object-store rename caveat.
 """
 
 from __future__ import annotations
@@ -115,6 +113,11 @@ PENDING_FORMAT_VERSION = 1
 #: Past it, the open set spills to a parquet side file and routing
 #: switches to distributed joins (see module docstring).
 CONTROL_CAP = 10_000
+
+#: a pending snapshot holding fewer parked rows than this is written as
+#: ONE file; a larger one (a bulk transaction cut by the batch boundary)
+#: keeps the scan's write parallelism
+SNAPSHOT_ONE_FILE_ROWS = 100_000
 
 
 class TxnPendingStore:
@@ -245,12 +248,14 @@ class TxnPendingStore:
         # — never to the micro-batch's transaction count (an earlier
         # design collected every txn id and paid ~40 s/epoch of serial
         # py4j at 315k txns/epoch, the dominant Amdahl term in
-        # BENCH/STREAM_SCALING_r5 round-1 cells).
+        # BENCH/STREAM_SCALING_r5 round-1 cells). Each open struct also
+        # carries the txn's row-event count, which sizes the snapshot write.
         per_txn = (
             data.groupBy("txn_id")
             .agg(
                 F.max((F.col("op") == "COMMIT").cast("int")).alias("_c"),
                 F.max(F.unix_millis("ts")).alias("_ts"),
+                F.count_if(F.col("op").isin("I", "U", "D")).alias("_n"),
             )
         )
         agg = (
@@ -258,7 +263,9 @@ class TxnPendingStore:
                 F.max("_ts").alias("hwm"),
                 F.count_if(F.col("_c") == 0).alias("n_open"),
                 F.collect_list(
-                    F.when(F.col("_c") == 0, F.struct(F.col("txn_id"), F.col("_ts")))
+                    F.when(
+                        F.col("_c") == 0, F.struct(F.col("txn_id"), F.col("_ts"), F.col("_n"))
+                    )
                 ).alias("open"),
             )
             .select("hwm", "n_open", F.slice("open", 1, CONTROL_CAP).alias("open"))
@@ -277,15 +284,15 @@ class TxnPendingStore:
 
         if not spill:
             # steady state: the open set is complete on the driver
-            open_last = {r["txn_id"]: r["_ts"] for r in agg["open"]}
-            open_ids = sorted(open_last)
+            open_txns = {r["txn_id"]: r for r in agg["open"]}
+            open_ids = sorted(open_txns)
             alive_ids = open_ids
             if cut is not None and open_ids:
                 # the clear-on-rotate analogue: a txn whose last activity
                 # fell abandon_timeout behind the stream's clock is dropped
                 # whole, and remembered in the grace set (drop-whole for
                 # any late COMMIT — see module docstring)
-                alive_ids = sorted(t for t, last in open_last.items() if last >= cut)
+                alive_ids = sorted(t for t, r in open_txns.items() if r["_ts"] >= cut)
                 ev_new = {t: hwm for t in open_ids if t not in set(alive_ids)}
 
             # commit snapshot N: fragments first, meta second (a crash
@@ -297,14 +304,14 @@ class TxnPendingStore:
             # id list into the plan as a pushed-down filter.
             if alive_ids:
                 parked = rows.where(F.col("txn_id").isin(alive_ids))
-                if len(alive_ids) <= 256:
+                if sum(open_txns[t]["_n"] for t in alive_ids) < SNAPSHOT_ONE_FILE_ROWS:
                     # the straddler set is boundary-proportional — a handful
-                    # of txns in steady state — but the write inherits the
+                    # of rows in steady state — but the write inherits the
                     # batch scan's partitioning and emits one near-empty
                     # file per scan task, paid again by next epoch's
-                    # pend_prev read. Cluster the (tiny) post-filter rows
-                    # into one file; the guard keeps a pathological
-                    # many-open-txn snapshot parallel.
+                    # pend_prev read. Cluster the (few) post-filter rows
+                    # into one file; a bulk straddler keeps the parallel
+                    # write instead of funnelling through one task.
                     parked = parked.repartition(1)
                 parked.write.mode("overwrite").parquet(snap)
             else:

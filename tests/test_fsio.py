@@ -127,7 +127,7 @@ def test_pending_store_hadoop_backend(spark, fs_log, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("fsio_sink_pending"))
     cfg = EngineConfig(
         max_files_per_trigger=1, shuffle_partitions=8, buffer_transactions=True,
-        write_changelog=False, txn_buffer_impl="jvm",
+        write_changelog=False,
     )
     sink = ManifestParquetSink(spark, root)
     job = ApplyJob(spark, binlog, sink, cfg)

@@ -1,24 +1,27 @@
-"""Hot-key two-stage collapse (SURVEY §7.2.4): a single Zipf-hot key whose
-partial updates would otherwise land in ONE pandas group is sub-salted,
-partially collapsed per slice, then finally collapsed per key — and the
-result is bit-identical to the single-stage pandas path and the pure-SQL
-kernel."""
+"""Hot key (SURVEY §7.2.4): a single Zipf-hot key whose partial updates
+span many Arrow batches. The sorted kernel carries the key across batch
+boundaries as its last write per cell (plus its last row and leading
+reset); the result must be bit-identical to the pure-SQL kernel, and the
+carry must stay bounded by the key's distinct cells."""
 
 from __future__ import annotations
 
 import datetime as dt
+import random
 
 import pandas as pd
 from pyspark.sql import Row
 
+from mysql_time_machine_spark.operators import reassemble
 from mysql_time_machine_spark.operators.reassemble import (
-    collapse_events_pandas,
+    collapse_events_sorted,
     collapse_events_sql,
 )
 from mysql_time_machine_spark.schema import EVENT_SCHEMA
 
 TS0 = dt.datetime(2024, 1, 1)
 CELLS = ["commit", "lang", "content"]
+ARROW_RECORDS = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
 def _hot_events(spark, n_hot=3000, n_cold=40):
@@ -62,28 +65,76 @@ def _canon(df):
     return pdf[["repo", "path", "row_status", "image", "full_image", "gtid_seq"]]
 
 
-def test_hot_key_two_stage_matches_single_stage_and_sql(spark):
+def test_hot_key_sorted_matches_sql_across_arrow_batches(spark):
+    """3-row Arrow batches split the hot key (and its mid-stream reset)
+    across ~1000 batch boundaries of the sorted kernel's carry."""
     events = _hot_events(spark)
-    single = _canon(collapse_events_pandas(events, n_buckets=8))
-    two_stage = _canon(
-        collapse_events_pandas(
-            events, n_buckets=8, hot_keys=[("hot", "file")], hot_key_split=4
-        )
-    )
+    before = spark.conf.get(ARROW_RECORDS)
+    try:
+        spark.conf.set(ARROW_RECORDS, "3")
+        got = _canon(collapse_events_sorted(events, n_buckets=8))
+    finally:
+        spark.conf.set(ARROW_RECORDS, before)
     sql = _canon(collapse_events_sql(events))
-    pd.testing.assert_frame_equal(two_stage, single)
-    pd.testing.assert_frame_equal(two_stage, sql, check_dtype=False)
-    hot = two_stage[two_stage["repo"] == "hot"].iloc[0]
+    pd.testing.assert_frame_equal(got, sql, check_dtype=False)
+    hot = got[got["repo"] == "hot"].iloc[0]
     assert hot["full_image"] and hot["row_status"] == "U"
 
 
-def test_hot_key_detection_threshold(spark):
-    """Self-detection: with a low threshold the hot key is found and split;
-    result still exact. (The detection aggregate is the streaming job's
-    per-batch path, EngineConfig.hot_key_threshold.)"""
-    events = _hot_events(spark, n_hot=800, n_cold=10)
-    got = _canon(
-        collapse_events_pandas(events, n_buckets=4, hot_key_threshold=100, hot_key_split=4)
-    )
-    ref = _canon(collapse_events_sql(events))
-    pd.testing.assert_frame_equal(got, ref, check_dtype=False)
+def _flat_stream(rng: random.Random, n_events: int) -> pd.DataFrame:
+    """One key's live flat events as the sorted kernel receives them: an
+    optional leading reset (I with cells, I with an empty map, or D), then
+    partial updates with random (possibly empty) cell sets and NULL
+    values. One row per (event, cell); a cell-less event is one row with
+    a NULL cell, as explode_outer emits it."""
+    cells = [f"c{i}" for i in range(rng.randint(1, 6))]
+    rows = []
+
+    def event(g, op, after):
+        base = dict(
+            repo="r", path="p", op=op, ts=pd.Timestamp(TS0) + pd.Timedelta(seconds=g),
+            schema_version=1, gtid_seq=g, log_file="binlog.000001", log_pos=g, seq_in_txn=0,
+        )
+        for cell, value in (after or {None: None}).items():
+            rows.append(dict(base, cell=cell, value=value))
+
+    lead = rng.choice(["I", "I_empty", "D", None])
+    if lead == "I":
+        event(0, "I", {c: f"i-{c}" for c in cells})
+    elif lead == "I_empty":
+        event(0, "I", {})
+    elif lead == "D":
+        event(0, "D", None)
+    for g in range(1, n_events):
+        picked = rng.sample(cells, rng.randint(0, len(cells)))
+        event(g, "U", {c: (None if rng.random() < 0.2 else f"v{g}-{c}") for c in picked})
+    return pd.DataFrame(rows)
+
+
+def test_sorted_carry_bounded_and_exact(monkeypatch):
+    """Driver-only: the streaming generator over random batch splits equals
+    one collapse of the whole input, and after every batch the carry holds
+    at most (distinct cells so far + 2) rows — the bound that keeps a hot
+    key linear (a carry of every row would grow with the event count)."""
+    sizes = []
+    real_fold = reassemble._fold_carry
+
+    def spy(tail):
+        out = real_fold(tail)
+        sizes.append((len(out), tail["cell"].nunique()))
+        return out
+
+    monkeypatch.setattr(reassemble, "_fold_carry", spy)
+    rng = random.Random(7)
+    for _ in range(200):
+        flat = _flat_stream(rng, rng.randint(1, 80))
+        cuts = [0]
+        while cuts[-1] < len(flat):
+            cuts.append(cuts[-1] + rng.randint(1, 60))
+        batches = [flat.iloc[a:b].reset_index(drop=True) for a, b in zip(cuts, cuts[1:])]
+        sizes.clear()
+        got = pd.concat(list(reassemble._collapse_sorted_batches(iter(batches))))
+        want = reassemble._collapse_sorted_flat(flat)
+        assert got.to_dict("records") == want.to_dict("records")
+        assert len(sizes) == len(batches)
+        assert all(n <= cells + 2 for n, cells in sizes), sizes

@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from mysql_time_machine_spark.operators.reassemble import (
     COLLAPSED_SCHEMA,
-    collapse_events_pandas,
     collapse_events_sorted,
     collapse_events_sql,
 )
@@ -280,7 +279,7 @@ def test_full_image_flag_all_kernels(spark):
         ],
         EVENT_SCHEMA,
     )
-    for impl in (collapse_events_pandas, collapse_events_sorted, collapse_events_sql):
+    for impl in (collapse_events_sorted, collapse_events_sql):
         got = {r["path"]: r for r in impl(events).collect()}
         assert got["k1"]["row_status"] == "U" and got["k1"]["full_image"], impl
         assert got["k1"]["image"] == {"lang": "res"}
@@ -306,7 +305,7 @@ def test_delete_then_update_does_not_resurrect_old_cells(spark, tmp_path):
         [_ev("o", "k1", "D", None, 20), _ev("o", "k1", "U", {"lang": "new"}, 21)],
         EVENT_SCHEMA,
     )
-    assert sink.merge(collapse_events_pandas(events), epoch_id=2)
+    assert sink.merge(collapse_events_sorted(events), epoch_id=2)
     row = sink.read().where(F.col("path") == "k1").head()
     assert row["lang"] == "new"
     assert row["commit"] is None and row["content"] is None  # no resurrection

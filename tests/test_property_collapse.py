@@ -1,6 +1,8 @@
 """Property-based kernel equivalence: for ARBITRARY small event streams
-(random ops, random partial cell sets, random interleavings), the three
-collapse kernels agree with each other and with a trivial Python fold.
+(random ops, random partial cell sets, random interleavings), the collapse
+kernels agree with each other and with a trivial Python fold. The sorted
+kernel runs at 3-row Arrow batches, so keys straddle batch boundaries and
+its carry is exercised.
 
 Derandomized (fixed example corpus per run) and example-capped so the
 suite stays bounded; the per-example Spark round-trip is the cost."""
@@ -15,7 +17,6 @@ from hypothesis import strategies as st
 from pyspark.sql import Row
 
 from mysql_time_machine_spark.operators.reassemble import (
-    collapse_events_pandas,
     collapse_events_sorted,
     collapse_events_sql,
 )
@@ -31,6 +32,8 @@ event_st = st.tuples(
     st.booleans(),                                       # null-valued cell?
 )
 stream_st = st.lists(event_st, min_size=1, max_size=24)
+
+ARROW_RECORDS = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
 def _py_fold(events):
@@ -90,26 +93,24 @@ def test_kernels_agree_on_arbitrary_streams(_spark, events):
     df = _spark.createDataFrame(_rows(events), EVENT_SCHEMA)
     expected = _py_fold(events)
 
-    results = {}
-    for name, impl in (
-        ("pandas", collapse_events_pandas),
-        ("sorted", collapse_events_sorted),
-        ("sql", collapse_events_sql),
-        ("sql_prefilter", lambda d: collapse_events_sql(d, join_prefilter=True)),
-    ):
+    def run(collapsed):
         got = {}
-        for r in impl(df).collect():
+        for r in collapsed.collect():
             img = None if r["image"] is None else dict(r["image"])
             got[(r["repo"], r["path"])] = (r["row_status"], img, r["full_image"], r["gtid_seq"])
-        results[name] = got
+        return got
 
-    assert (
-        results["pandas"]
-        == results["sorted"]
-        == results["sql"]
-        == results["sql_prefilter"]
-    )
+    before = _spark.conf.get(ARROW_RECORDS)
+    try:
+        _spark.conf.set(ARROW_RECORDS, "3")
+        # one bucket, so every key's events share a partition and a key
+        # with more than 3 flat rows straddles an Arrow batch boundary
+        sorted_ = run(collapse_events_sorted(df, n_buckets=1))
+    finally:
+        _spark.conf.set(ARROW_RECORDS, before)
+    sql = run(collapse_events_sql(df))
+    assert sorted_ == sql == run(collapse_events_sql(df, join_prefilter=True))
     for key, (op, img) in expected.items():
-        got_op, got_img, _fi, _g = results["pandas"][key]
+        got_op, got_img, _fi, _g = sorted_[key]
         assert got_op == op, (key, events)
         assert got_img == img, (key, events)

@@ -1,6 +1,6 @@
 """Golden-state replay — the core oracle (SURVEY.md §5.2.1).
 
-Engine replay (both the applyInPandas path and the pure-Catalyst path)
+Engine replay (both the sorted mapInPandas path and the pure-Catalyst path)
 must equal the independent pandas fold, per-row, including
 sha256(content) — the BASELINE.json invariant.
 """
@@ -34,7 +34,7 @@ def _run(spark, log, impl):
     return got
 
 
-@pytest.mark.parametrize("impl", ["pandas", "sorted", "sql"])
+@pytest.mark.parametrize("impl", ["sorted", "sql"])
 def test_replay_matches_oracle(spark, rich_log, impl):
     got = _run(spark, rich_log, impl)
     exp = replay_expected(rich_log.events, _final_columns(rich_log))

@@ -492,6 +492,9 @@ def test_unknown_collapse_impl_rejected():
         cfg.resolved_collapse_impl("streaming")
     assert EngineConfig(collapse_impl="sorted").resolved_collapse_impl("streaming") == "sorted"
     assert EngineConfig().resolved_collapse_impl("batch") == "sql"
+    # the former grouped-map kernel's name stays a working alias
+    for regime in ("streaming", "batch"):
+        assert EngineConfig(collapse_impl="pandas").resolved_collapse_impl(regime) == "sorted"
 
 
 def test_dry_run_writes_nothing(spark, binlog_dir, tmp_path_factory):

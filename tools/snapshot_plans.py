@@ -40,10 +40,9 @@ scale-independent; AQE re-plans at runtime). What to look for:
   cases: the centroid cross-join and the registry range-join fallback
   (DDL-heavy histories, where a CASE fold would defeat codegen).
 - **Top-k is TakeOrderedAndProject**, not a global sort.
-- applyInPandas appears as `FlatMapGroupsInPandas` fed by a single
-  Exchange on the salted bucket — one shuffle for the whole replay; the
-  hot-key path adds one extra (bucket, sub-salt) exchange for the hot
-  subset only.
+- The sorted kernel appears as `MapInPandas` over a `Sort` fed by a
+  single Exchange on the salted bucket — one shuffle of the live events
+  for the whole replay, and no Python-side sort.
 """
 
 
@@ -51,9 +50,7 @@ def cap(title: str, df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain()
-    # the hot-key path's \x00 key separator shows up verbatim in explain
-    # output; escape it so the file stays plain text
-    text = buf.getvalue().rstrip().replace("\x00", "\\x00")
+    text = buf.getvalue().rstrip()
     return f"\n```\n=== {title} ===\n{text}\n```\n"
 
 
@@ -69,7 +66,6 @@ def main() -> int:
         ngram_jaccard_pairs,
         simhash_pairs,
     )
-    from mysql_time_machine_spark.operators.reassemble import collapse_events_pandas
     from mysql_time_machine_spark.plans.replay import replay_batch
     from mysql_time_machine_spark.schema import BASE_COLUMNS
     from mysql_time_machine_spark.session import get_spark
@@ -86,12 +82,8 @@ def main() -> int:
         replay_batch(ev, list(BASE_COLUMNS), EngineConfig(), impl="sql"),
     ))
     out.append(cap(
-        "CDC replay, applyInPandas bucket kernel (collapse_events_pandas)",
-        replay_batch(ev, list(BASE_COLUMNS), EngineConfig(), impl="pandas"),
-    ))
-    out.append(cap(
-        "hot-key two-stage collapse (explicit hot key, sub-salted partial stage)",
-        collapse_events_pandas(ev, n_buckets=8, hot_keys=[("org0", "src/doc_0.txt")], hot_key_split=4),
+        "CDC replay, sorted streaming kernel (collapse_events_sorted)",
+        replay_batch(ev, list(BASE_COLUMNS), EngineConfig(), impl="sorted"),
     ))
     out.append(cap(
         "q1 pricing summary (pushdown + partial/final agg)",
