@@ -10,7 +10,7 @@ events at gtid 0.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mysql_time_machine_spark.config import EngineConfig
@@ -21,17 +21,23 @@ from mysql_time_machine_spark.operators.reassemble import (
 )
 
 
-def filter_events(events: DataFrame, cfg: EngineConfig) -> DataFrame:
+def event_filter(cfg: EngineConfig) -> Column | None:
     """F1 table-regex gate (CHANGES.txt:41-42) + S4 end-binlog-file bound
-    (CHANGES.txt:129). Catalyst pushes both into the scan."""
-    out = events
+    (CHANGES.txt:129) as one row predicate; None when neither is set."""
+    keep = None
     if cfg.end_log_file:
-        out = out.where(F.col("log_file") <= cfg.end_log_file)
+        keep = F.col("log_file") <= cfg.end_log_file
     if cfg.table_regex and cfg.table_regex != ".*":
-        out = out.where(
-            F.col("repo").isNull() | F.col("repo").rlike(cfg.table_regex)
-        )
-    return out
+        regex = F.col("repo").isNull() | F.col("repo").rlike(cfg.table_regex)
+        keep = regex if keep is None else keep & regex
+    return keep
+
+
+def filter_events(events: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """``events`` where ``event_filter(cfg)`` holds. Catalyst pushes both
+    bounds into the scan."""
+    keep = event_filter(cfg)
+    return events if keep is None else events.where(keep)
 
 
 def replay_batch(

@@ -47,7 +47,7 @@ import os
 import re
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -671,7 +671,16 @@ class ManifestParquetSink(Sink):
         matched & 'D' -> DELETE; matched & 'U' -> cell-wise update (the
         batch image may be a partial changed-cells map, CHANGES.txt:173);
         matched & 'I' -> replace; not matched & not 'D' -> INSERT.
-        Bucket-granular copy-on-write; idempotent per epoch (fence).
+        Idempotent per epoch (fence).
+
+        ``merge_strategy='cow'``: bucket-granular copy-on-write — one
+        per-bucket stats collect over the persisted batch names the touched
+        buckets (and sizes the old-image broadcast), then one rewrite job.
+        ``merge_strategy='mor'``: ONE delta-write job, no persist; its
+        per-bucket I/U/D counts and max gtid come from an Observation on
+        that write, so lineage keeps the same ``per_bucket`` shape (non-empty
+        buckets only) and an empty batch commits zeros without moving
+        ``max_gtid_seq``.
 
         Semantics contract with the collapse kernels (merge_logic.py):
         ``full_image`` = true means the image is the COMPLETE row state
@@ -706,6 +715,54 @@ class ManifestParquetSink(Sink):
         # between write and commit.
         cl_job = self._start_changelog_write(changelog, snap)
         batch = batch.withColumn("_bucket", salted_shuffle_key(self.n_buckets))
+        if self.merge_strategy == "mor":
+            # merge-on-read: append the collapsed batch as per-bucket delta
+            # files — cost proportional to the BATCH, independent of table
+            # size; the read path / compaction resolve them. ONE job: the
+            # write needs no touched-bucket list in advance, so the lineage
+            # counts ride on it as an Observation and the batch is computed
+            # once, by the write, with no cache. The observation sits after
+            # the exchange, in the write's result stage, so a retried map
+            # stage cannot count twice; its name is unique to this commit.
+            out_dir = os.path.join(self.root, "data", f"s{snap:06d}-delta")
+            obs = Observation(f"mtm-mor-delta-e{epoch_id}-s{snap}")
+            status_counts = [
+                F.array(
+                    *[
+                        F.count_if((F.col("_bucket") == b) & (F.col("row_status") == st))
+                        for b in range(self.n_buckets)
+                    ]
+                ).alias(f"n_{st}")
+                for st in ("I", "U", "D")
+            ]
+            # same write.distribution-mode=hash clustering as the CoW write
+            # below: the collapse output's partitions are salted hash
+            # slots, not sink buckets, so without it each task writes
+            # several bucket dirs and the delta set accretes ~2x the files
+            # the read resolve + compaction must open. The exchange is
+            # batch-sized — exactly the MoR premise.
+            (
+                batch.withColumn("_ord", F.lit(snap).cast("long"))
+                .repartition(self.n_buckets, F.col("_bucket"))
+                .observe(obs, F.max("gtid_seq").alias("max_gtid"), *status_counts)
+                .write.mode("overwrite")
+                .partitionBy("_bucket")
+                .parquet(out_dir)
+            )
+            got = obs.get
+            per_bucket = {}
+            for b in range(self.n_buckets):
+                counts = {f"n_{st}": got[f"n_{st}"][b] for st in ("I", "U", "D")}
+                if any(counts.values()):
+                    per_bucket[b] = counts
+            delta_buckets = {k: list(v) for k, v in m.get("delta_buckets", {}).items()}
+            for b, files in self._written_buckets(out_dir).items():
+                delta_buckets.setdefault(b, []).extend(files)
+            return self._finish_merge(
+                m, snap, epoch_id, dict(m["buckets"]), delta_buckets, per_bucket,
+                got["max_gtid"], business_columns, registry, lineage, cl_job,
+            )
+
         batch.persist()
         try:
             # one control-plane job: the per-bucket stats aggregate already
@@ -721,39 +778,14 @@ class ManifestParquetSink(Sink):
                 .collect()
             )
             touched = sorted(r["_bucket"] for r in stats_rows)
-
-            if self.merge_strategy == "mor":
-                # merge-on-read: append the collapsed batch as per-bucket
-                # delta files — cost proportional to the BATCH, independent
-                # of table size; the read path / compaction resolve them
-                out_dir = os.path.join(self.root, "data", f"s{snap:06d}-delta")
-                # same write.distribution-mode=hash clustering as the CoW
-                # write below: the collapse output's partitions are salted
-                # hash slots, not sink buckets, so without it each task
-                # writes several bucket dirs and the delta set accretes
-                # ~2x the files the read resolve + compaction must open.
-                # The exchange is batch-sized — exactly the MoR premise.
-                batch.withColumn("_ord", F.lit(snap).cast("long")).repartition(
-                    self.n_buckets, F.col("_bucket")
-                ).write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-                buckets = dict(m["buckets"])
-                delta_buckets = {
-                    k: list(v) for k, v in m.get("delta_buckets", {}).items()
-                }
-                for b in touched:
-                    bdir = os.path.join(out_dir, f"_bucket={b}")
-                    if self.fs.isdir(bdir):
-                        files = [
-                            os.path.join(bdir, fn)
-                            for fn in self.fs.listdir(bdir)
-                            if fn.endswith(".parquet")
-                        ]
-                        if files:
-                            delta_buckets.setdefault(str(b), []).extend(files)
-                return self._finish_merge(
-                    m, snap, epoch_id, buckets, delta_buckets, stats_rows,
-                    business_columns, registry, lineage, cl_job,
-                )
+            per_bucket = {
+                r["_bucket"]: {"n_I": r["n_I"], "n_U": r["n_U"], "n_D": r["n_D"]}
+                for r in stats_rows
+            }
+            max_gtid = max(
+                (r["max_gtid"] for r in stats_rows if r["max_gtid"] is not None),
+                default=None,
+            )
 
             if m.get("delta_buckets"):
                 raise ValueError(
@@ -803,9 +835,7 @@ class ManifestParquetSink(Sink):
                 # wider than `keys` (they carry the old image map), so gate
                 # on the collapsed-batch row count the stats pass already
                 # measured; an outsized epoch keeps the shuffle join.
-                n_batch_rows = sum(
-                    r["n_I"] + r["n_U"] + r["n_D"] for r in stats_rows
-                )
+                n_batch_rows = sum(sum(c.values()) for c in per_bucket.values())
                 if n_batch_rows <= self.BROADCAST_MERGE_MAX_ROWS:
                     old_img = F.broadcast(old_img)
                 merged_img = (
@@ -856,23 +886,11 @@ class ManifestParquetSink(Sink):
             merged = merged.repartition(self.n_buckets, F.col("_bucket"))
             merged.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
 
-            # collect the files actually written, keyed by bucket
-            new_buckets: dict[str, list[str]] = {}
-            for b in touched:
-                bdir = os.path.join(out_dir, f"_bucket={b}")
-                if self.fs.isdir(bdir):
-                    files = [
-                        os.path.join(bdir, fn)
-                        for fn in self.fs.listdir(bdir)
-                        if fn.endswith(".parquet")
-                    ]
-                    if files:
-                        new_buckets[str(b)] = files
-
+            new_buckets = self._written_buckets(out_dir)
             buckets = {k: v for k, v in m["buckets"].items() if int(k) not in touched}
             buckets.update(new_buckets)
             return self._finish_merge(
-                m, snap, epoch_id, buckets, {}, stats_rows,
+                m, snap, epoch_id, buckets, {}, per_bucket, max_gtid,
                 business_columns, registry, lineage, cl_job,
             )
         finally:
@@ -922,6 +940,21 @@ class ManifestParquetSink(Sink):
         t.start()
         return job
 
+    def _written_buckets(self, out_dir: str) -> dict[str, list[str]]:
+        """bucket -> parquet files of a ``partitionBy("_bucket")`` write,
+        from one listing of ``out_dir`` plus one per bucket written."""
+        out: dict[str, list[str]] = {}
+        for entry in self.fs.listdir(out_dir):
+            if not entry.startswith("_bucket="):
+                continue
+            bdir = os.path.join(out_dir, entry)
+            files = [
+                os.path.join(bdir, fn) for fn in self.fs.listdir(bdir) if fn.endswith(".parquet")
+            ]
+            if files:
+                out[entry.split("=", 1)[1]] = files
+        return out
+
     def _finish_merge(
         self,
         m: dict[str, Any],
@@ -929,7 +962,8 @@ class ManifestParquetSink(Sink):
         epoch_id: int,
         buckets: dict[str, list[str]],
         delta_buckets: dict[str, list[str]],
-        stats_rows,
+        per_bucket: dict[int, dict[str, int]],
+        max_gtid: int | None,
         business_columns: list[tuple[str, str]],
         registry: list[dict],
         lineage: dict[str, Any] | None,
@@ -959,28 +993,18 @@ class ManifestParquetSink(Sink):
                     if fn.endswith(".parquet")
                 )
 
-        max_gtid = max(
-            [r["max_gtid"] for r in stats_rows if r["max_gtid"] is not None],
-            default=m["max_gtid_seq"],
-        )
         lin = dict(lineage or {})
-        lin.update(
-            {
-                "n_I": sum(r["n_I"] for r in stats_rows),
-                "n_U": sum(r["n_U"] for r in stats_rows),
-                "n_D": sum(r["n_D"] for r in stats_rows),
-                "per_bucket": {
-                    str(r["_bucket"]): {"n_I": r["n_I"], "n_U": r["n_U"], "n_D": r["n_D"]}
-                    for r in stats_rows
-                },
-            }
-        )
+        for st in ("n_I", "n_U", "n_D"):
+            lin[st] = sum(c[st] for c in per_bucket.values())
+        lin["per_bucket"] = {str(b): c for b, c in per_bucket.items()}
 
         manifest = {
             "snapshot_id": snap,
             "parent": m["snapshot_id"],
             "epoch_id": epoch_id,
-            "max_gtid_seq": int(max(max_gtid, m["max_gtid_seq"])),
+            "max_gtid_seq": int(
+                m["max_gtid_seq"] if max_gtid is None else max(max_gtid, m["max_gtid_seq"])
+            ),
             "business_columns": [list(c) for c in business_columns],
             "buckets": buckets,
             "lineage": lin,

@@ -2,12 +2,16 @@
 
 readStream over the simulated binlog directory -> per-micro-batch:
 
-  1. (optional, ``buffer_transactions``) the uuidBuffer: the JVM pending
-     store releases committed transactions whole and parks fragments that
-     straddle a micro-batch boundary (streaming/txn_store.py)
-  2. classify + filter (P1/F1/S4)
-  3. DDL events -> active-schema registry (driver-side, tiny) -> target
-     schema evolution (J0 / CHANGES.txt:117,57,44-46)
+  1. ONE control job: with ``buffer_transactions``, the uuidBuffer — the
+     JVM pending store releases committed transactions whole, parks
+     fragments that straddle a micro-batch boundary
+     (streaming/txn_store.py), and its control aggregate also returns the
+     epoch stats; without it, one global stats aggregate. Either way the
+     stats are per-class counts, the delay basis and the DDL events of
+     the classified, filtered batch (P1/F1/S4, A3/A5)
+  2. classify + filter the released rows (P1/F1/S4) for the consumers
+  3. the DDL events from step 1 -> active-schema registry (driver-side,
+     tiny) -> target schema evolution (J0 / CHANGES.txt:117,57,44-46)
   4. live-event pre-reduction + last-writer-wins collapse: the sorted
      mapInPandas kernel, or the pure-Catalyst kernel for big batches
      (A1/A2, uuidBuffer analogue CHANGES.txt:168-170)
@@ -44,8 +48,9 @@ def _phase(spark: SparkSession, name: str):
     """Label every Spark job this thread launches until exit as ``mtm:<name>``.
 
     Pure observability: the label shows in the Spark UI and event log, so
-    per-phase wall time is attributable (BENCH/stream_phase_profile.py).
-    Thread-local in the JVM — concurrent streams don't cross-label."""
+    per-phase wall time is attributable (cdcbench's traced run reads it as
+    ``job.phase.<name>_s``). Thread-local in the JVM — concurrent streams
+    don't cross-label."""
     sc = spark.sparkContext
     prev = sc.getLocalProperty("spark.job.description")
     try:
@@ -56,21 +61,28 @@ def _phase(spark: SparkSession, name: str):
 
 from mysql_time_machine_spark.config import EngineConfig
 from mysql_time_machine_spark.functions.core import classify_event, daily_bucket_utc
-from mysql_time_machine_spark.plans.replay import filter_events
+from mysql_time_machine_spark.plans.replay import event_filter, filter_events
 from mysql_time_machine_spark.registry import SchemaRegistry
 from mysql_time_machine_spark.sinks.manifest import ManifestParquetSink
+from mysql_time_machine_spark.streaming.txn_store import (
+    EVENT_CLASSES,
+    PENDING_FORMAT_VERSION,
+    TxnPendingStore,
+    ddl_event,
+    epoch_stats,
+)
 
 
 #: columns any post-classification consumer of the micro-batch cache can
-#: read: the DDL collect (gtid_seq, log_file, log_pos, ddl), the changelog
-#: branch (position + day columns), and the collapse kernels (key, op,
-#: `after`, order columns). `before`, the gtid STRING, and the txn/server
-#: ids are consumed only upstream (classification / txn resolve) and are
+#: read: the changelog branch (position + day columns) and the collapse
+#: kernels (key, op, `after`, order columns). `before`, `ddl`, the gtid
+#: STRING, and the txn/server ids are consumed only upstream
+#: (classification / the stats aggregate / txn resolve) and are
 #: deliberately absent — see the persist() site.
 _EPOCH_CACHE_COLUMNS = frozenset(
     [
         "_class", "repo", "path", "op", "after", "ts", "schema_version",
-        "gtid_seq", "log_file", "log_pos", "seq_in_txn", "ddl",
+        "gtid_seq", "log_file", "log_pos", "seq_in_txn",
     ]
 )
 
@@ -95,11 +107,6 @@ class ApplyJob:
             # binary with a bumped version starts a FRESH checkpoint instead
             # of silently resuming incompatible state (offsets replay; the
             # sink fence makes that idempotent)
-            from mysql_time_machine_spark.streaming.txn_store import (
-                PENDING_FORMAT_VERSION,
-                TxnPendingStore,
-            )
-
             self.checkpoint_dir = os.path.join(
                 self.checkpoint_dir, f"txn_jvm_v{PENDING_FORMAT_VERSION}"
             )
@@ -115,39 +122,39 @@ class ApplyJob:
     # -- per-micro-batch body -------------------------------------------------
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         cfg = self.cfg
+        # (A3/A5) the epoch stats — consumed counts by class, the max
+        # replication delay basis, the DDL events — come from ONE narrow
+        # aggregate: the pending store's control job when it runs, else a
+        # global aggregate over the filtered batch. It doubles as the
+        # empty-batch probe: an empty micro-batch (e.g. every row parked by
+        # the txn buffer) counts zero events and commits nothing. The
+        # aggregate reads ONLY narrow columns — the fat-row guard is the
+        # session-wide arrow.maxBytesPerBatch byte cap (session.py), which
+        # the JVM Arrow writers enforce directly on every Python-kernel
+        # transfer.
         if self.txn_store is not None:
             # jvm txn buffering: release committed transactions (merging in
             # fragments left pending by earlier epochs), park straddlers
             with _phase(self.spark, "txn-resolve"):
-                batch = self.txn_store.resolve(batch, epoch_id)
-        batch = filter_events(batch, cfg)
-        batch = batch.withColumn("_class", classify_event())
+                batch, stats = self.txn_store.resolve(
+                    batch, epoch_id, keep=event_filter(cfg)
+                )
+        batch = filter_events(batch, cfg).withColumn("_class", classify_event())
+        if self.txn_store is None:
+            with _phase(self.spark, "stats-agg"):
+                stats = batch.agg(
+                    *epoch_stats(F.lit(True)),
+                    F.sort_array(F.collect_list(ddl_event(F.lit(True)))).alias("ddls"),
+                ).head()
+        events_consumed = {
+            c: stats[f"n_{c}"] for c in EVENT_CLASSES if stats[f"n_{c}"]
+        }
+        if not events_consumed:
+            # empty micro-batch: don't burn a snapshot commit
+            return
         persisted = False
         try:
             impl = cfg.resolved_collapse_impl("streaming")
-            # (A3/A5) event-level metrics: consumed counts by class + max
-            # replication delay, excluding ROTATE's ts=0 (CHANGES.txt:58-61).
-            # The empty-batch probe rides the same aggregate: an empty
-            # micro-batch (e.g. every row parked by the txn buffer)
-            # yields zero groups, so the dedicated isEmpty()
-            # job the epoch used to pay is free. The aggregate reads ONLY
-            # narrow columns — the round-6 payload-width term (a full
-            # map-column scan+fold per epoch, ~3x the rest of this scan)
-            # is gone: the fat-row guard it approximated is now the
-            # session-wide arrow.maxBytesPerBatch byte cap (session.py),
-            # which the JVM Arrow writers enforce directly on every
-            # Python-kernel transfer.
-            aggs = [
-                F.count("*").alias("n"),
-                F.max(F.when(F.col("_class") != "ROTATE", F.col("ts"))).alias("max_ts"),
-                F.max("gtid_seq").alias("max_gtid"),
-            ]
-            with _phase(self.spark, "stats-agg"):
-                stats = batch.groupBy("_class").agg(*aggs).collect()
-            if not stats:
-                # empty micro-batch: don't burn a snapshot commit
-                return
-            events_consumed = {r["_class"]: r["n"] for r in stats}
             if (
                 cfg.collapse_impl == "auto"
                 and events_consumed.get("ROW", 0) >= cfg.big_batch_rows
@@ -157,23 +164,22 @@ class ApplyJob:
                 # map-side combine shrinks the exchange to ~keys x cells,
                 # where the sorted kernel would shuffle every raw event
                 impl = "sql"
-            elif events_consumed.get("DDL", 0) > 0 or (
-                cfg.write_changelog and not cfg.dry_run
-            ):
-                # small-batch regime WITH a second consumer (DDL collect or
-                # changelog branch): the re-scans win from a cache. A
-                # BIG batch must NOT be materialized — caching 10s of
+            elif cfg.write_changelog and not cfg.dry_run:
+                # small-batch regime WITH a second consumer (the changelog
+                # branch beside the collapse): the re-scan wins from a
+                # cache, filled by whichever consumer runs first. A BIG
+                # batch must NOT be materialized — caching 10s of
                 # millions of rows to re-read them twice costs more than
                 # the column-pruned parquet re-scans it saves, and the
                 # cache build is an IO term that does not shrink with
                 # cores (measured: BENCH/STREAM_SCALING_r6.md). A
-                # single-consumer epoch (plain DDL-free stream) skips the
-                # cache too: building it would serve exactly one read,
-                # strictly worse than the collapse's own pruned scan.
+                # single-consumer epoch skips the cache too: building it
+                # would serve exactly one read, strictly worse than the
+                # collapse's own pruned scan.
                 # Prune the cache INPUT to the union of the remaining
                 # consumers' columns first: after classification nothing
-                # reads `before` (half the map payload), the gtid string,
-                # or the txn/server ids — caching them pays scan +
+                # reads `before` (half the map payload), `ddl`, the gtid
+                # string, or the txn/server ids — caching them pays scan +
                 # serialization + storage for columns no consumer touches.
                 batch = batch.select(
                     *[c for c in batch.columns if c in _EPOCH_CACHE_COLUMNS]
@@ -181,20 +187,10 @@ class ApplyJob:
                 batch.persist()
                 persisted = True
 
-            # (J0) DDL -> active schema; driver-side control flow, tiny.
-            # The stats aggregate already counted DDL rows — the collect
-            # job (and, in the common DDL-free epoch, the scan that built
-            # the micro-batch cache) only runs when there is one to apply.
-            if events_consumed.get("DDL", 0) > 0:
-                with _phase(self.spark, "ddl-collect"):
-                    ddls = (
-                        batch.where(F.col("_class") == "DDL")
-                        .select("gtid_seq", "log_file", "log_pos", "ddl")
-                        .sort("gtid_seq", "log_file", "log_pos")
-                        .collect()
-                    )
-                for r in ddls:
-                    self.registry.apply_ddl(r["ddl"], r["gtid_seq"])
+            # (J0) DDL -> active schema; driver-side control flow, tiny —
+            # the DDL events arrived sorted with the stats
+            for r in stats["ddls"]:
+                self.registry.apply_ddl(r["ddl"], r["gtid_seq"])
             # always pin the sink's target schema to the active schema —
             # idempotent, and correct whether this epoch is fresh, replayed,
             # or resumed mid-stream after a crash
@@ -248,7 +244,7 @@ class ApplyJob:
 
             lineage = {
                 "events_consumed": events_consumed,
-                "delay_basis_ts": str(max((r["max_ts"] for r in stats if r["max_ts"] is not None), default="")),
+                "delay_basis_ts": "" if stats["max_ts"] is None else str(stats["max_ts"]),
             }
             if cfg.dry_run:
                 with _phase(self.spark, "collapse-dryrun"):

@@ -20,16 +20,21 @@ narrow aggregate plus pushed-down filters, entirely JVM-side:
 
 1. union the micro-batch with the (tiny) pending-fragment store left by
    the previous epoch;
-2. ONE column-pruned job: a distributed ``groupBy(txn_id)`` partial
-   aggregate (map-side combined; the exchange carries one narrow row
-   per txn) finds each transaction's commit presence and last activity,
-   and the final fold hands the driver the event-time high-water mark
-   plus ONLY the open (straddling) transactions' ids — driver state is
-   proportional to straddlers, never to the batch's txn count;
+2. ONE column-pruned job, the epoch's only control-plane action: a
+   distributed ``groupBy(txn_id)`` partial aggregate (map-side combined;
+   the exchange carries one narrow row per txn) over the transactions
+   AND the control events (``txn_id = -1``, one group) finds each
+   transaction's commit presence and last activity, and counts the
+   events each group would release. The final fold hands the driver the
+   event-time high-water mark, ONLY the open (straddling) transactions'
+   ids — driver state is proportional to straddlers, never to the
+   batch's txn count — and the epoch stats (per-class counts, delay
+   basis, DDL events) summed over the released groups, so the apply job
+   runs no stats or DDL pass of its own;
 3. released rows = ``txn_id NOT IN open`` — in the overwhelmingly common
    case every transaction is batch-complete, ``open`` is EMPTY and the
    row events pass through UNTOUCHED (no filter, no join, no extra scan:
-   the buffer costs one narrow aggregate per epoch);
+   the buffer costs nothing beyond the one control aggregate);
 4. still-open fragments = ``txn_id IN open`` -> the new pending
    snapshot (a pushed-down parquet filter; past 10k open ids the routing
    switches to broadcast joins so the plan never embeds a huge id list).
@@ -97,10 +102,11 @@ import json
 import os
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from mysql_time_machine_spark.fsio import MetaFS
+from mysql_time_machine_spark.functions.core import classify_event
 from mysql_time_machine_spark.schema import EVENT_SCHEMA
 
 #: bump when the snapshot layout or semantics change — ApplyJob keys the
@@ -118,6 +124,31 @@ CONTROL_CAP = 10_000
 #: ONE file; a larger one (a bulk transaction cut by the batch boundary)
 #: keeps the scan's write parallelism
 SNAPSHOT_ONE_FILE_ROWS = 100_000
+
+#: the classes classify_event() emits; the epoch stats count each one
+EVENT_CLASSES = ("ROW", "BEGIN", "COMMIT", "DDL", "ROTATE", "OTHER")
+
+
+def epoch_stats(keep: Column) -> list[Column]:
+    """The epoch's event-level counters (A3/A5) as aggregate columns over
+    the events where ``keep`` holds, classified in a ``_class`` column:
+    one ``n_<class>`` count per EVENT_CLASSES entry and ``max_ts``, the
+    replication-delay basis, which excludes ROTATE's ts=0
+    (CHANGES.txt:58-61). All are fixed-width buffers, so a keyed
+    aggregate over them stays a HashAggregate."""
+    cls = F.col("_class")
+    return [F.count_if(keep & (cls == c)).alias(f"n_{c}") for c in EVENT_CLASSES] + [
+        F.max(F.when(keep & (cls != "ROTATE"), F.col("ts"))).alias("max_ts")
+    ]
+
+
+def ddl_event(keep: Column) -> Column:
+    """A classified event as a (gtid_seq, log_file, log_pos, ddl) struct
+    when it is a DDL where ``keep`` holds, else NULL; sorting the structs
+    orders DDLs as the binlog applies them."""
+    return F.when(
+        keep & (F.col("_class") == "DDL"), F.struct("gtid_seq", "log_file", "log_pos", "ddl")
+    )
 
 
 class TxnPendingStore:
@@ -179,20 +210,27 @@ class TxnPendingStore:
         return spark.read.schema(EVENT_SCHEMA).parquet(self._snap_path(e))
 
     # -- the per-epoch resolution --------------------------------------------
-    def resolve(self, batch: DataFrame, epoch_id: int) -> DataFrame:
-        """micro-batch -> row events of COMMITTED transactions (whole, even
-        when their fragments arrived epochs ago) + control events;
-        BEGIN/COMMIT markers are consumed; still-open fragments move to
-        snapshot ``epoch_id``. Everything JVM-side — see module docstring.
+    def resolve(
+        self, batch: DataFrame, epoch_id: int, keep: Column | None = None
+    ) -> tuple[DataFrame, Row]:
+        """micro-batch -> (row events of COMMITTED transactions (whole, even
+        when their fragments arrived epochs ago) + control events, the
+        epoch stats of that output where ``keep`` holds); BEGIN/COMMIT
+        markers are consumed; still-open fragments move to snapshot
+        ``epoch_id``. Everything JVM-side — see module docstring.
+
+        The stats row carries ``epoch_stats``' columns and ``ddls``, the
+        sorted ``ddl_event`` structs, computed by the same job that finds
+        the open transactions: the epoch needs no aggregate of its own over
+        the released rows.
 
         Deliberately NOT cached: the micro-batch is a column-prunable
         parquet scan, and in-memory caching of the two map payload columns
         costs more than the extra scans it saves (measured ~2.5 s per 0.5M
-        rows at local[32] vs ~0.3 s per full re-scan). The committed-id
-        broadcast and the hwm aggregate read (txn_id, op) / (ts) only —
-        pruned scans — and the full payload is read exactly twice: once by
-        the anti-join that writes the (tiny) snapshot, once when the
-        released rows are materialized into the downstream epoch cache."""
+        rows at local[32] vs ~0.3 s per full re-scan). The control
+        aggregate reads narrow columns only; the payload is read by the
+        snapshot write (straddlers only) and by the epoch's consumers of
+        the released rows."""
         spark = batch.sparkSession
         cols = [f.name for f in EVENT_SCHEMA.fields]
 
@@ -215,9 +253,9 @@ class TxnPendingStore:
         # unless an eviction actually happened within the window.
         ev_ids = sorted(ev_prev)
         not_evicted = ~F.col("txn_id").isin(ev_ids) if ev_ids else F.lit(True)
-        data = batch.where((F.col("txn_id") != -1) & not_evicted).select(*cols)
-        if pend_prev is not None:
-            data = data.unionByName(pend_prev)  # never holds evicted ids
+        is_ctrl = F.col("txn_id") == -1
+        is_txn = F.col("txn_id") != -1  # false for a NULL id, like is_ctrl
+        is_row = F.col("op").isin("I", "U", "D")
         if ev_ids:
             # retire grace entries whose COMMIT arrived (in-order delivery:
             # nothing of a txn can follow its own COMMIT) — tiny pruned
@@ -235,51 +273,72 @@ class TxnPendingStore:
                 ev_prev.pop(x, None)
 
         # ONE narrow, column-pruned control-plane job, FULLY distributed up
-        # to the last reduction: groupBy(txn_id) computes per-transaction
-        # commit presence + last activity with map-side partial aggregation
-        # (the exchange carries ~one row per txn, three narrow columns),
-        # then a final fold returns the event-time high-water mark (markers
-        # carry real ts; ROTATE's ts=0 lives in the control branch and
-        # never drags the hwm), the open-transaction COUNT, and at most
-        # CONTROL_CAP open (id, last activity) structs — the slice runs in
-        # the plan, so the driver row is bounded even when most
-        # transactions are open (log truncated mid-backlog). The driver
-        # therefore holds data proportional to boundary STRADDLERS, capped
-        # — never to the micro-batch's transaction count (an earlier
-        # design collected every txn id and paid ~40 s/epoch of serial
-        # py4j at 315k txns/epoch, the dominant Amdahl term in
-        # BENCH/STREAM_SCALING_r5 round-1 cells). Each open struct also
-        # carries the txn's row-event count, which sizes the snapshot write.
+        # to the last reduction. groupBy(txn_id) runs over the transactions
+        # AND the control events (txn_id = -1, one group) with map-side
+        # partial aggregation (the exchange carries ~one row per txn). Per
+        # group it computes commit presence, last activity, the row-event
+        # count (it sizes the snapshot write) and the epoch stats of the
+        # rows the group would release: a transaction releases its row
+        # events only (its markers are consumed), the control group every
+        # event. The final fold returns the event-time high-water mark
+        # over transactions only (markers carry real ts; ROTATE's ts=0 sits
+        # in the control group and never drags the hwm), the open count,
+        # at most CONTROL_CAP open (id, last activity, rows) structs — the
+        # slice runs in the plan, so the driver row is bounded even when
+        # most transactions are open (log truncated mid-backlog) — and the
+        # stats summed over the released groups (committed or control),
+        # which are exact on the spill path too. The driver therefore
+        # holds data proportional to boundary STRADDLERS, capped — never
+        # to the micro-batch's transaction count (an earlier design
+        # collected every txn id and paid ~40 s/epoch of serial py4j at
+        # 315k txns/epoch, the dominant Amdahl term in
+        # BENCH/STREAM_SCALING_r5 round-1 cells).
+        keep = F.lit(True) if keep is None else keep
+        src = batch.where(is_ctrl | (is_txn & not_evicted)).select(*cols)
+        if pend_prev is not None:
+            src = src.unionByName(pend_prev)  # never holds evicted ids
         per_txn = (
-            data.groupBy("txn_id")
+            src.withColumn("_class", classify_event())
+            .withColumn("_keep", (is_ctrl | is_row) & keep)
+            # each DDL event is a group key of its own inside the control
+            # group (a transaction's rows never classify as DDL), so the
+            # per-group buffers stay fixed-width and only the final fold
+            # collects the (few) DDL structs
+            .withColumn("_ddl", ddl_event(F.col("_keep")))
+            .groupBy("txn_id", "_ddl")
             .agg(
                 F.max((F.col("op") == "COMMIT").cast("int")).alias("_c"),
                 F.max(F.unix_millis("ts")).alias("_ts"),
-                F.count_if(F.col("op").isin("I", "U", "D")).alias("_n"),
+                F.count_if(is_row).alias("_n"),
+                *epoch_stats(F.col("_keep")),
             )
         )
+        is_open = is_txn & (F.col("_c") == 0)
+        released = is_ctrl | (F.col("_c") == 1)
         agg = (
             per_txn.agg(
-                F.max("_ts").alias("hwm"),
-                F.count_if(F.col("_c") == 0).alias("n_open"),
+                F.max(F.when(is_txn, F.col("_ts"))).alias("hwm"),
+                F.count_if(is_open).alias("n_open"),
                 F.collect_list(
-                    F.when(
-                        F.col("_c") == 0, F.struct(F.col("txn_id"), F.col("_ts"), F.col("_n"))
-                    )
+                    F.when(is_open, F.struct(F.col("txn_id"), F.col("_ts"), F.col("_n")))
                 ).alias("open"),
+                *[
+                    F.coalesce(F.sum(F.when(released, F.col(f"n_{c}"))), F.lit(0)).alias(f"n_{c}")
+                    for c in EVENT_CLASSES
+                ],
+                F.max(F.when(released, F.col("max_ts"))).alias("max_ts"),
+                F.sort_array(F.collect_list(F.when(released, F.col("_ddl")))).alias("ddls"),
             )
-            .select("hwm", "n_open", F.slice("open", 1, CONTROL_CAP).alias("open"))
+            .withColumn("open", F.slice("open", 1, CONTROL_CAP))
             .head()
         )
         hwm = max(prev_hwm, agg["hwm"] or 0)
-        n_open = agg["n_open"] or 0
+        n_open = agg["n_open"]
         spill = n_open > CONTROL_CAP
         cut = None if self.timeout_ms is None else hwm - self.timeout_ms
 
-        rows = data.where(F.col("op").isin("I", "U", "D"))
+        rows = src.where(is_txn & is_row)
         snap = self._snap_path(epoch_id)
-        is_ctrl = F.col("txn_id") == -1
-        is_row = F.col("op").isin("I", "U", "D")
         ev_new: dict[int, int] = {}
 
         if not spill:
@@ -292,8 +351,8 @@ class TxnPendingStore:
                 # fell abandon_timeout behind the stream's clock is dropped
                 # whole, and remembered in the grace set (drop-whole for
                 # any late COMMIT — see module docstring)
-                alive_ids = sorted(t for t, r in open_txns.items() if r["_ts"] >= cut)
-                ev_new = {t: hwm for t in open_ids if t not in set(alive_ids)}
+                alive_ids = [t for t in open_ids if open_txns[t]["_ts"] >= cut]
+                ev_new = {t: hwm for t in open_ids if open_txns[t]["_ts"] < cut}
 
             # commit snapshot N: fragments first, meta second (a crash
             # between the two leaves no meta -> the snapshot does not exist
@@ -325,19 +384,19 @@ class TxnPendingStore:
             not_open = (
                 ~F.col("txn_id").isin(open_ids) if open_ids else F.lit(True)
             )
-            out = batch.where(is_ctrl | (is_row & not_evicted & not_open)).select(
-                *cols
-            )
+            out = batch.where(
+                is_ctrl | (is_row & is_txn & not_evicted & not_open)
+            ).select(*cols)
             if pend_prev is not None:
                 out = out.unionByName(pend_prev.where(is_row & not_open))
-            return out
+            return out, agg
 
         # PATHOLOGICAL batch (most transactions open — e.g. a log truncated
         # mid-backlog): spill the open set to a per-epoch parquet side file
         # and route everything through distributed joins against it; the
         # driver holds no ids at all.
         open_path = self._open_path(epoch_id)
-        per_txn.where(F.col("_c") == 0).select("txn_id", "_ts").write.mode(
+        per_txn.where(is_open).select("txn_id", "_ts").write.mode(
             "overwrite"
         ).parquet(open_path)
         open_all = spark.read.parquet(open_path)
@@ -363,13 +422,13 @@ class TxnPendingStore:
         parked.write.mode("overwrite").parquet(snap)
         self._commit_meta(epoch_id, hwm, ev_prev, ev_new)
 
-        rows_b = batch.where(is_row & not_evicted).select(*cols)
+        rows_b = batch.where(is_row & is_txn & not_evicted).select(*cols)
         if pend_prev is not None:
             rows_b = rows_b.unionByName(pend_prev)
         out = rows_b.join(
             open_all.select("txn_id"), "txn_id", "left_anti"
         ).unionByName(batch.where(is_ctrl).select(*cols))
-        return out
+        return out, agg
 
     def _commit_meta(
         self, epoch_id: int, hwm: int, ev_prev: dict, ev_new: dict

@@ -54,6 +54,71 @@ def cap(title: str, df) -> str:
     return f"\n```\n=== {title} ===\n{text}\n```\n"
 
 
+def epoch_action_plans(spark, tmpdir: str) -> list[tuple[str, str, str]]:
+    """Run ONE buffered merge-on-read epoch — a committed transaction, a
+    straddler and a DDL — and return (job label, action, plan) for every
+    Spark action the epoch issues on the driver thread: each collect (head
+    goes through it) and each parquet write, planned just before it runs.
+    The changelog write runs on its own thread and is left out."""
+    import threading
+
+    import pandas as pd
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from mysql_time_machine_spark.config import EngineConfig
+    from mysql_time_machine_spark.schema import EVENT_SCHEMA
+    from mysql_time_machine_spark.sinks.manifest import ManifestParquetSink
+    from mysql_time_machine_spark.streaming.job import ApplyJob
+
+    t0 = pd.Timestamp("2024-01-01")
+    rows = []
+    for op, txn, path, ddl in [
+        ("BEGIN", 1, None, "BEGIN"), ("I", 1, "a", None), ("COMMIT", 1, None, "COMMIT"),
+        ("DDL", -1, None, "ALTER TABLE repos ADD COLUMN extra varchar(64)"),
+        ("BEGIN", 2, None, "BEGIN"), ("I", 2, "b", None),
+    ]:
+        g = len(rows) + 1
+        rows.append(dict(
+            log_file="binlog.000001", log_pos=g, gtid=f"u:{g}", gtid_seq=g, txn_id=txn,
+            seq_in_txn=g, server_id=1, ts=t0, op=op, schema_version=1,
+            repo="o" if path else None, path=path, before=None,
+            after={"commit": "c0", "lang": "py", "content": path} if path else None,
+            ddl=ddl,
+        ))
+    src = os.path.join(tmpdir, "epoch-0")
+    spark.createDataFrame(pd.DataFrame(rows), schema=EVENT_SCHEMA).coalesce(1).write.parquet(src)
+    batch = spark.read.schema(EVENT_SCHEMA).parquet(src)
+
+    plans: list[tuple[str, str, str]] = []
+
+    def record(action: str, df) -> None:
+        if threading.current_thread() is threading.main_thread():
+            label = spark.sparkContext.getLocalProperty("spark.job.description")
+            plans.append((label, action, cap(f"{label} {action}", df)))
+
+    collect, parquet = DataFrame.collect, DataFrameWriter.parquet
+
+    def collect_spy(df):
+        record("collect", df)
+        return collect(df)
+
+    def parquet_spy(writer, path, *a, **kw):
+        record(f"write {os.path.basename(path)}", writer._df)
+        return parquet(writer, path, *a, **kw)
+
+    DataFrame.collect, DataFrameWriter.parquet = collect_spy, parquet_spy
+    try:
+        sink = ManifestParquetSink(
+            spark, os.path.join(tmpdir, "sink"), n_buckets=4, merge_strategy="mor"
+        )
+        cfg = EngineConfig(shuffle_partitions=4, buffer_transactions=True)
+        ApplyJob(spark, os.path.join(tmpdir, "binlog"), sink, cfg).process_batch(batch, 0)
+    finally:
+        DataFrame.collect, DataFrameWriter.parquet = collect, parquet
+    return plans
+
+
 def main() -> int:
     from pyspark.sql import functions as F
 
@@ -127,12 +192,53 @@ def main() -> int:
     from mysql_time_machine_spark.streaming.txn_store import TxnPendingStore
 
     store = TxnPendingStore(tempfile.mkdtemp(prefix="plan_txnstore_"))
+    released, _stats = store.resolve(with_txn_markers(ev, txn_width=10), epoch_id=0)
     out.append(cap(
-        "txn pending-store resolve (jvm buffer: committed-id routing via "
-        "pushed-down isin / broadcast join; batch-complete rows pass "
+        "txn pending-store resolve (jvm buffer: released rows; open-id "
+        "routing via pushed-down isin / anti join; batch-complete rows pass "
         "through with NO added operator when nothing straddles)",
-        store.resolve(with_txn_markers(ev, txn_width=10), epoch_id=0),
+        released,
     ))
+    # one buffered merge-on-read epoch, action by action: the fused control
+    # aggregate and the one-job delta write, then the previous shapes
+    actions = epoch_action_plans(spark, tempfile.mkdtemp(prefix="plan_epoch_"))
+    out.append(
+        "\n```\n=== one buffered merge-on-read epoch with a straddler and a "
+        "DDL: the driver thread's actions, in order (the changelog write "
+        "runs on its own thread) ===\n"
+        + "\n".join(f"{label} {action}" for label, action, _ in actions)
+        + "\n```\n"
+    )
+    for label, action, text in actions:
+        if label == "mtm:txn-resolve" and action == "collect":
+            out.append(text.replace(
+                f"=== {label} {action} ===",
+                "=== fused control aggregate (mtm:txn-resolve collect: ONE "
+                "groupBy(txn_id) over transactions AND control events with "
+                "per-group commit flag, last activity, row count and epoch "
+                "stats; the final fold sums the stats of released groups — "
+                "the epoch's only control action) ===",
+            ))
+        if action.endswith("-delta"):
+            out.append(text.replace(
+                f"=== {label} {action} ===",
+                "=== merge-on-read delta write (ONE write action: Exchange "
+                "hashpartitioning(_bucket) feeds CollectMetrics — the "
+                "lineage Observation — then the partitioned write; the "
+                "collapsed batch is neither cached nor collected, and the "
+                "InMemoryRelation is the epoch cache of the released events "
+                "that the changelog branch shares) ===",
+            ))
+    for name, title in [
+        ("epoch_actions_before.txt", "the same epoch's driver-thread actions BEFORE the fusion"),
+        ("control_plans_before.txt", "control plans BEFORE the fusion: the txn-resolve "
+         "aggregate, the stats-agg groupBy(_class) over the released rows and the "
+         "ddl-collect sort"),
+        ("mor_merge_plans_before.txt", "merge-on-read merge BEFORE: the per-bucket stats "
+         "collect over the persisted batch, then the delta write reading the cache"),
+    ]:
+        with open(os.path.join(REPO, "plans", "epoch_fuse", name)) as f:
+            out.append(f"\n```\n=== {title} (kept for comparison) ===\n{f.read().rstrip()}\n```\n")
     from mysql_time_machine_spark.operators.reassemble import collapse_events_sql
     from mysql_time_machine_spark.sinks.manifest import ManifestParquetSink
 
